@@ -57,16 +57,12 @@ from pyspark.sql import DataFrame
 from careers_spark.functions.text import tokenize_py
 from careers_spark.synth import PRED_PATTERNS
 
-RESOLVED_SCHEMA = (
-    "conv_id string, turn_idx int, kind string, start int, end int, "
-    "surface string, topic string, score double, pred string, obj string"
-)
-
-# int-coded wire schema: when global surface/topic id dims are available
-# (coded mode), only small ints cross the cogroup shuffle and the Arrow
-# boundary in BOTH directions; names are broadcast-joined back JVM-side.
-# The resolver's Arrow string traffic was the dominant scaling cost of
-# the stage (r2 executor-curve decomposition).
+# int-coded wire schema: global surface/topic ids (lexicographic over
+# the dictionary universes), so only small ints cross the cogroup
+# shuffle and the Arrow boundary in BOTH directions; names are
+# broadcast-joined back JVM-side. The resolver's Arrow string traffic
+# was the dominant scaling cost of the stage (r2 executor-curve
+# decomposition).
 RESOLVED_CODED_SCHEMA = (
     "conv_id string, turn_idx int, kind string, start int, end int, "
     "surf_id int, topic_id int, score double, pred string, obj_id int"
@@ -103,6 +99,22 @@ class InternedContexts:
             self.ids[i] = np.fromiter((p[0] for p in pairs), np.int64, len(pairs))
             self.ws[i] = np.fromiter((p[1] for p in pairs), np.float64, len(pairs))
         self._cache: dict[int, float] = {}
+
+    @classmethod
+    def of(cls, context_vectors) -> "InternedContexts":
+        """Intern a (topic, ctx_ids, ctx_ws) DataFrame (driver collect)
+        or a {topic: {context: weight}} dict; interned input passes
+        through."""
+        if isinstance(context_vectors, cls):
+            return context_vectors
+        if isinstance(context_vectors, dict):
+            return cls(context_vectors)
+        return cls(
+            {
+                r.topic: dict(zip(list(r.ctx_ids), list(r.ctx_ws)))
+                for r in context_vectors.select("topic", "ctx_ids", "ctx_ws").collect()
+            }
+        )
 
     def __getstate__(self):
         d = self.__dict__.copy()
@@ -482,13 +494,12 @@ def _resolve_conv(
     ndarray indexing boxes a numpy scalar per access, which measurably
     dominates at one row per microsecond; tolist() happens once per
     batch in the caller. Rows are sorted by (turn, start, end,
-    topic_code); topic_code is a LEXICOGRAPHIC id space (batch-local
-    factorize in legacy mode, the global dictionary id in coded mode —
-    either way id order == name order, so integer comparisons reproduce
-    the reference's name-ordered tie-breaks), topic_gid the interned ctx
+    topic_code); topic_code is the global LEXICOGRAPHIC dictionary id
+    (id order == name order, so integer comparisons reproduce the
+    reference's name-ordered tie-breaks), topic_gid the interned ctx
     id (-1 when unknown). Appends code-valued rows (surf/topic/obj as
-    ints) to out_rows; the caller maps codes to names (legacy) or ships
-    them as-is for a JVM-side broadcast name join (coded).
+    ints) to out_rows; the caller ships them as-is for a JVM-side
+    broadcast name join.
     """
     # --- mention boundaries (same (turn,start,end) -> one mention) --------
     m_first: list[int] = [lo]
@@ -685,61 +696,24 @@ def _rows_to_pdf_coded(rows: list[tuple]) -> pd.DataFrame:
     return pdf
 
 
-def _rows_to_pdf_named(
-    rows: list[tuple], surf_names: np.ndarray, topic_names: np.ndarray
-) -> pd.DataFrame:
-    """Legacy string-output path: map the batch-local codes back to
-    names python-side (one vectorized take per column)."""
-    pdf = pd.DataFrame(rows, columns=_CODE_COLS)
-    out = pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"],
-            "turn_idx": pdf["turn_idx"].astype("int32"),
-            "kind": pdf["kind"],
-            "start": pdf["start"].astype("int32"),
-            "end": pdf["end"].astype("int32"),
-            "surface": (
-                surf_names[pdf["surf_id"].to_numpy(np.int64)]
-                if len(pdf) else pd.Series([], dtype=object)
-            ),
-            "topic": (
-                topic_names[pdf["topic_id"].to_numpy(np.int64)]
-                if len(pdf) else pd.Series([], dtype=object)
-            ),
-            "score": pdf["score"].astype("float64"),
-            "pred": pdf["pred"],
-            "obj": (
-                pd.Series(
-                    [
-                        None if pd.isna(v) else topic_names[int(v)]
-                        for v in pdf["obj_id"]
-                    ],
-                    index=pdf.index,
-                    dtype=object,
-                )
-                if len(pdf) else pd.Series([], dtype=object)
-            ),
-        }
-    )
-    return out
-
-
 def resolve(
     candidates: DataFrame,
     transcripts: DataFrame,
     context_vectors,  # DataFrame (topic, ctx_ids, ctx_ws) | dict | InternedContexts
+    *,
+    surface_names: list[str],
+    topic_names: list[str],
     n_buckets: int | None = None,
     mention_spans: DataFrame | None = None,
-    surface_names: list[str] | None = None,
-    topic_names: list[str] | None = None,
     max_rows_per_conv: int = 3000,
     distance_weighting: bool = False,
     dense_min_rows: int | None = None,
 ) -> DataFrame:
     """Cogrouped per-conversation resolution, bucket-batched.
 
-    candidates: output of linking.attach_candidates — slim rows only
-        (conv_id, turn_idx, start, end, surface, topic, prior); context
+    candidates: output of linking.attach_candidates_coded — slim rows
+        only (conv_id, turn_idx, start, end, surf_id, topic_id, prior),
+        coded against surface_names/topic_names; context
         vectors ride a BROADCAST, not the shuffle (carrying 30-element
         arrays per candidate row multiplied shuffle volume ~10x and made
         this stage I/O-bound).
@@ -747,8 +721,10 @@ def resolve(
         turns carrying >= 2 mention spans are shipped (slim semi-join —
         chosen mentions are a subset of mention spans, so the gap pass
         never needs the others).
-    context_vectors: (topic, ctx_ids, ctx_ws) dimension table
-    Returns the unified link/triple frame (RESOLVED_SCHEMA).
+    context_vectors: (topic, ctx_ids, ctx_ws) dimension table, or its
+        dict / InternedContexts form
+    Returns the unified link/triple frame: (conv_id, turn_idx, kind,
+    start, end, surface, topic, score, pred, obj).
 
     Conversations are independent, so they are grouped into hash buckets
     and one pandas group carries many conversations — this amortizes the
@@ -759,13 +735,11 @@ def resolve(
     worker memory; default 16x shuffle partitions.
 
     surface_names/topic_names: the COMPLETE dictionary universes of
-    candidate surfaces and topics (e.g. from the KGModel). When both are
-    given, the stage runs in CODED mode: candidates are broadcast-joined
-    to global lexicographic int ids before the cogroup shuffle, only
-    ints cross the Arrow boundary in both directions, and names are
-    broadcast-joined back JVM-side afterwards. Output schema is
-    identical either way; ids are assigned in sorted order, so the
-    integer tie-breaks match the legacy per-batch factorization exactly.
+    candidate surfaces and topics (the KGModel's), whose sorted
+    positions are the candidates' surf_id/topic_id. Only ints cross the
+    Arrow boundary in both directions, and names are broadcast-joined
+    back JVM-side afterwards; ids are assigned in sorted order, so
+    integer tie-breaks are name-ordered.
 
     max_rows_per_conv: per-conversation cost guard (the reference's
     maxNumberOfWords=3000 analogue, AmbiguityForest.scala:105) —
@@ -790,44 +764,29 @@ def resolve(
     if n_buckets is None:
         n_buckets = 16 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    if isinstance(context_vectors, InternedContexts):
-        interned = context_vectors
-    elif isinstance(context_vectors, dict):
-        interned = InternedContexts(context_vectors)
-    else:
-        interned = InternedContexts(
-            {
-                r.topic: dict(zip(list(r.ctx_ids), list(r.ctx_ws)))
-                for r in context_vectors.select("topic", "ctx_ids", "ctx_ws").collect()
-            }
-        )
-
-    coded = surface_names is not None and topic_names is not None
-    if coded:
-        # sorted ids: id order == name order (tie-break contract)
-        surface_names = sorted(set(surface_names))
-        topic_names = sorted(set(topic_names))
-        gid_lut = np.fromiter(
-            (interned.tid.get(t, -1) for t in topic_names),
-            np.int64,
-            len(topic_names),
-        )
-        # SLIM worker broadcast: coded workers call ctx.sim only — the
-        # names list (hundreds of thousands of python strings) and the
-        # tid dict exist solely for driver-side interning/legacy mode.
-        # Every python worker unpickles its own broadcast copy, so
-        # shipping them multiplies deserialization time and resident
-        # footprint by the worker count (bandwidth pressure at scale).
-        slim = InternedContexts.__new__(InternedContexts)
-        slim.names = None
-        slim.tid = None
-        slim.ids = interned.ids
-        slim.ws = interned.ws
-        slim._cache = {}
-        ctx_bc = spark.sparkContext.broadcast((slim, gid_lut))
-        surface_dim, topic_dim = build_id_dims(spark, surface_names, topic_names)
-    else:
-        ctx_bc = spark.sparkContext.broadcast((interned, None))
+    interned = InternedContexts.of(context_vectors)
+    # sorted ids: id order == name order (tie-break contract)
+    surface_names = sorted(set(surface_names))
+    topic_names = sorted(set(topic_names))
+    gid_lut = np.fromiter(
+        (interned.tid.get(t, -1) for t in topic_names),
+        np.int64,
+        len(topic_names),
+    )
+    # SLIM worker broadcast: workers call ctx.sim only — the names list
+    # (hundreds of thousands of python strings) and the tid dict exist
+    # solely for driver-side interning. Every python worker unpickles
+    # its own broadcast copy, so shipping them multiplies
+    # deserialization time and resident footprint by the worker count
+    # (bandwidth pressure at scale).
+    slim = InternedContexts.__new__(InternedContexts)
+    slim.names = None
+    slim.tid = None
+    slim.ids = interned.ids
+    slim.ws = interned.ws
+    slim._cache = {}
+    ctx_bc = spark.sparkContext.broadcast((slim, gid_lut))
+    surface_dim, topic_dim = build_id_dims(spark, surface_names, topic_names)
 
     # only turns that can yield a gap pattern need their text shipped.
     # Eligibility comes from the (cheap, usually checkpointed) mention
@@ -848,33 +807,14 @@ def resolve(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
     )
 
-    _EMPTY_NAMES = np.empty(0, dtype=object)
-
     def fn(cand_pdf: pd.DataFrame, turns_pdf: pd.DataFrame) -> pd.DataFrame:
         ctx, lut = ctx_bc.value
         if not len(cand_pdf):
-            return (
-                _rows_to_pdf_coded([])
-                if coded
-                else _rows_to_pdf_named([], _EMPTY_NAMES, _EMPTY_NAMES)
-            )
+            return _rows_to_pdf_coded([])
 
         conv_code, conv_names = pd.factorize(cand_pdf["conv_id"], sort=True)
-        if coded:
-            surf_code = cand_pdf["surf_id"].to_numpy(np.int64)
-            topic_code = cand_pdf["topic_id"].to_numpy(np.int64)
-            surf_names_b = topic_names_b = None
-        else:
-            # sort=True makes integer code order == lexicographic name
-            # order, preserving the reference's name-ordered tie-breaks
-            surf_code, surf_names_b = pd.factorize(cand_pdf["surface"], sort=True)
-            topic_code, topic_names_b = pd.factorize(cand_pdf["topic"], sort=True)
-            tid = ctx.tid
-            lut = np.fromiter(
-                (tid.get(t, -1) for t in topic_names_b),
-                np.int64,
-                len(topic_names_b),
-            )
+        surf_code = cand_pdf["surf_id"].to_numpy(np.int64)
+        topic_code = cand_pdf["topic_id"].to_numpy(np.int64)
 
         turn = cand_pdf["turn_idx"].to_numpy(np.int64)
         start = cand_pdf["start"].to_numpy(np.int64)
@@ -930,58 +870,29 @@ def resolve(
                     distance_weighting=distance_weighting,
                     dense_min_rows=dense_min_rows,
                 )
-        if coded:
-            return _rows_to_pdf_coded(rows)
-        return _rows_to_pdf_named(
-            rows,
-            np.asarray(surf_names_b, dtype=object),
-            np.asarray(topic_names_b, dtype=object),
-        )
+        return _rows_to_pdf_coded(rows)
 
-    if coded and "surf_id" in candidates.columns:
-        # candidates already dictionary-coded upstream
-        # (linking.attach_candidates_coded) — nothing to join
-        cand_in = candidates.select(
-            "conv_id", "turn_idx", "start", "end", "surf_id", "topic_id", "prior"
-        )
-    elif coded:
-        cand_in = (
-            candidates.select(
-                "conv_id", "turn_idx", "start", "end", "surface", "topic", "prior"
-            )
-            .join(F.broadcast(surface_dim), "surface")
-            .join(F.broadcast(topic_dim), "topic")
-            .select(
-                "conv_id", "turn_idx", "start", "end", "surf_id", "topic_id", "prior"
-            )
-        )
-    else:
-        cand_in = candidates.select(
-            "conv_id", "turn_idx", "start", "end", "surface", "topic", "prior"
-        )
-
+    cand_in = candidates.select(
+        "conv_id", "turn_idx", "start", "end", "surf_id", "topic_id", "prior"
+    )
     out = (
         bucket(cand_in)
         .groupby("bucket")
         .cogroup(bucket(turns_slim).groupby("bucket"))
-        .applyInPandas(
-            fn, schema=RESOLVED_CODED_SCHEMA if coded else RESOLVED_SCHEMA
+        .applyInPandas(fn, schema=RESOLVED_CODED_SCHEMA)
+    )
+    obj_dim = topic_dim.select(
+        F.col("topic_id").alias("obj_id"), F.col("topic").alias("obj")
+    )
+    return (
+        out.join(F.broadcast(surface_dim), "surf_id")
+        .join(F.broadcast(topic_dim), "topic_id")
+        .join(F.broadcast(obj_dim), "obj_id", "left")
+        .select(
+            "conv_id", "turn_idx", "kind", "start", "end",
+            "surface", "topic", "score", "pred", "obj",
         )
     )
-    if coded:
-        obj_dim = topic_dim.select(
-            F.col("topic_id").alias("obj_id"), F.col("topic").alias("obj")
-        )
-        out = (
-            out.join(F.broadcast(surface_dim), "surf_id")
-            .join(F.broadcast(topic_dim), "topic_id")
-            .join(F.broadcast(obj_dim), "obj_id", "left")
-            .select(
-                "conv_id", "turn_idx", "kind", "start", "end",
-                "surface", "topic", "score", "pred", "obj",
-            )
-        )
-    return out
 
 
 def links_of(resolved: DataFrame) -> DataFrame:

@@ -415,35 +415,3 @@ def topic_context_vectors(top_ctx: DataFrame) -> DataFrame:
         )
     )
 
-
-def build_dictionary(
-    tables: dict[str, DataFrame],
-    second_order: bool = True,
-    context_filter: bool = True,
-) -> dict[str, DataFrame]:
-    """End-to-end dictionary build from raw synth tables.
-
-    Returns surface_forms (with priors), resolved redirects, link_weights,
-    top_contexts and packed context vectors. Defaults mirror the
-    reference model build: contexts pass the allowedContext predicate
-    (Disambiguator.scala:43-102, applied while assembling the binary
-    model in testDisambiguator.scala:100,126) and sparse topics inherit
-    second-order contexts at x0.1 (Disambiguator.scala:469-490 — the
-    reference's own TODO asks for it precomputed, AmbiguityForest.scala:46-48).
-    """
-    resolved = resolve_redirects(tables["redirects"])
-    sf = surface_priors(build_surface_forms(tables["surface_forms_raw"], resolved))
-    tc_raw = tables["topic_contexts"]
-    if context_filter:
-        tc_raw = allowed_context(tc_raw)
-    lw = link_weights(tc_raw)
-    if second_order:
-        lw = expand_second_order_contexts(lw)
-    tc = top_contexts(lw)
-    return {
-        "redirects_resolved": resolved,
-        "surface_forms": sf,
-        "link_weights": lw,
-        "top_contexts": tc,
-        "context_vectors": topic_context_vectors(tc),
-    }

@@ -22,23 +22,15 @@ from pyspark.sql import functions as F
 MIN_TOPIC_REL_WEIGHT = 1e-5  # reference: AmbiguityForest.scala:94-95
 
 
-def attach_candidates(mentions: DataFrame, surface_forms: DataFrame) -> DataFrame:
-    """mentions -> candidate rows with anchor prior (one row per
-    (mention, candidate topic))."""
-    dim = surface_forms.select("surface", "topic", "prior")
-    return mentions.join(F.broadcast(dim), "surface").filter(
-        F.col("prior") >= MIN_TOPIC_REL_WEIGHT
-    )
-
-
 def attach_candidates_coded(
     mentions: DataFrame,
     surface_forms: DataFrame,
     surface_dim: DataFrame,
     topic_dim: DataFrame,
 ) -> DataFrame:
-    """attach_candidates with dictionary-CODED output: (conv_id,
-    turn_idx, start, end, surf_id, topic_id, prior). Surface strings
+    """mentions -> candidate rows with anchor prior, one row per
+    (mention, candidate topic), dictionary-CODED: (conv_id, turn_idx,
+    start, end, surf_id, topic_id, prior). Surface strings
     leave the plan at the map-side broadcast join, so every downstream
     corpus-phase shuffle (TF-IDF aggregations, the resolve cogroup) and
     checkpoint carries small ints instead of repeated dictionary
@@ -60,12 +52,10 @@ def attach_candidates_coded(
 
 def tfidf_context_scores(
     candidates: DataFrame,
-    transcripts: DataFrame,
+    turn_terms: DataFrame,
     top_ctx: DataFrame,
     word_doc_freq: DataFrame,
     n_docs: int,
-    turn_terms: DataFrame | None = None,
-    topic_col: str = "topic",
 ) -> DataFrame:
     """Anchor-prior x TF-IDF context-cosine candidate scoring.
 
@@ -88,18 +78,15 @@ def tfidf_context_scores(
     reduces to the anchor prior exactly, so enabling this on corpora
     whose context names never appear in text is a no-op.
 
-    turn_terms: optional precomputed (conv_id, turn_idx, term) table,
-    distinct per turn — lets the pipeline tokenize the corpus ONCE and
-    share the pass with word_doc_freq instead of re-tokenizing here.
+    turn_terms: the (conv_id, turn_idx, term) table, distinct per turn —
+    the corpus is tokenized ONCE and the pass is shared with
+    word_doc_freq.
 
-    topic_col: name of the topic-key column shared by `candidates` and
-    `top_ctx` — "topic" (strings) or a dictionary-coded "topic_id"
-    (ints; the pipeline's 100 TB posture, keeping strings off every
-    shuffle of this stage).
-
-    candidates must be unique on their full column set (true of
-    attach_candidates output: distinct mention spans x a (surface,
-    topic)-unique dictionary) — scoring groups by those columns.
+    candidates and top_ctx are keyed by the dictionary-coded `topic_id`
+    (ints keep strings off every shuffle of this stage). candidates must
+    be unique on their full column set (true of attach_candidates_coded
+    output: distinct mention spans x a (surface, topic)-unique
+    dictionary) — scoring groups by those columns.
 
     Shuffle-volume note: the dot-product join only ever matches terms
     that occur in the corpus, so topic term vectors are pre-shrunk to
@@ -122,26 +109,20 @@ def tfidf_context_scores(
     # runs in ONE task — a serial chunk no executor count can shrink.
     sc = top_ctx.sparkSession.sparkContext
     topic_terms = (
-        top_ctx.select(topic_col, "context", "weight1")
+        top_ctx.select("topic_id", "context", "weight1")
         .repartition(2 * sc.defaultParallelism)
         .withColumn("term", F.explode(F.array_distinct(tokenize_udf(F.col("context")))))
         .join(idf.withColumnRenamed("word", "term"), "term", "left")
         .na.fill({"idf": 1.0})
-        .groupBy(topic_col, "term")
+        .groupBy("topic_id", "term")
         .agg(F.sum(F.col("weight1") * F.col("idf")).alias("tw"))
         .localCheckpoint(eager=True)
     )
     # norms over the FULL vectors (before any vocabulary shrink)
-    topic_norm = topic_terms.groupBy(topic_col).agg(
+    topic_norm = topic_terms.groupBy("topic_id").agg(
         F.sqrt(F.sum(F.col("tw") * F.col("tw"))).alias("tnorm")
     )
 
-    if turn_terms is None:
-        turn_terms = transcripts.select(
-            "conv_id",
-            "turn_idx",
-            F.explode(F.array_distinct(tokenize_udf(F.col("text")))).alias("term"),
-        )
     turn_terms = (
         turn_terms
         .join(F.broadcast(topic_terms.select("term").distinct()), "term", "left_semi")
@@ -161,11 +142,11 @@ def tfidf_context_scores(
     # onto candidates with a map-side-combining groupBy.
     active_terms = topic_terms.join(
         F.broadcast(turn_terms.select("term").distinct()), "term", "left_semi"
-    ).join(topic_norm, topic_col)
+    ).join(topic_norm, "topic_id")
 
     keys = candidates.columns  # identity + carried cols (incl. prior)
     exploded = (
-        candidates.join(F.broadcast(active_terms), topic_col)
+        candidates.join(F.broadcast(active_terms), "topic_id")
         .join(turn_terms.withColumnRenamed("idf", "t_idf"),
               ["conv_id", "turn_idx", "term"])
         .select(
@@ -198,13 +179,3 @@ def tfidf_context_scores(
     )
     return out
 
-
-def attach_context_vectors(candidates: DataFrame, context_vectors: DataFrame) -> DataFrame:
-    """Attach the per-topic top-K context vector (broadcast dim join);
-    topics with no known contexts get empty arrays."""
-    out = candidates.join(F.broadcast(context_vectors), "topic", "left")
-    return out.withColumn(
-        "ctx_ids", F.coalesce(F.col("ctx_ids"), F.array().cast("array<string>"))
-    ).withColumn(
-        "ctx_ws", F.coalesce(F.col("ctx_ws"), F.array().cast("array<double>"))
-    )

@@ -85,23 +85,6 @@ class TokenAhoCorasick:
         return res
 
 
-def build_automaton(surface_forms: DataFrame) -> TokenAhoCorasick:
-    """Driver-side build from the (already filtered) dictionary.
-
-    Bounded by dictionary size, same memory contract as the reference's
-    ~300 MB phrase map (WordInTopicCount.scala:21-24); fail fast if absurd.
-    """
-    distinct = surface_forms.select("surface").distinct()
-    n = distinct.count()  # fail fast BEFORE the collect (heap guard)
-    if n > 50_000_000:
-        raise MemoryError(f"dictionary too large to broadcast: {n} surfaces")
-    surfaces = [r[0] for r in distinct.collect()]
-    ac = TokenAhoCorasick()
-    for s in sorted(surfaces):
-        ac.add(s)
-    return ac.build()
-
-
 def detect_mentions(
     spark: SparkSession, transcripts: DataFrame, automaton: TokenAhoCorasick
 ) -> DataFrame:

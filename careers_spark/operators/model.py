@@ -18,29 +18,39 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
+from careers_spark.operators.coherence import InternedContexts
 from careers_spark.operators.mentions import TokenAhoCorasick
+
+
+def name_universes(surface_forms: DataFrame) -> tuple[list[str], list[str]]:
+    """Sorted distinct surfaces and topics of the dictionary — one
+    guarded (surface, topic) collect."""
+    sf_dim = surface_forms.select("surface", "topic").distinct()
+    n_sf = sf_dim.count()  # fail fast BEFORE the collect (heap guard)
+    if n_sf > 50_000_000:
+        raise MemoryError(f"dictionary too large to broadcast: {n_sf} pairs")
+    pairs = sf_dim.collect()
+    return sorted({r.surface for r in pairs}), sorted({r.topic for r in pairs})
 
 
 @dataclass
 class KGModel:
     automaton: TokenAhoCorasick
-    ctx_map: dict[str, dict[str, float]]
-    # sorted dictionary universes: the resolver's coded mode assigns
-    # global lexicographic int ids from these, so only ints cross the
-    # cogroup shuffle / Arrow boundary (names join back JVM-side)
-    surface_names: list[str] = None
-    topic_names: list[str] = None
+    # sorted dictionary universes: the resolver assigns global
+    # lexicographic int ids from these, so only ints cross the cogroup
+    # shuffle / Arrow boundary (names join back JVM-side)
+    surface_names: list[str]
+    topic_names: list[str]
 
-    # interned context vectors (careers_spark.operators.coherence
-    # .InternedContexts), built once at model-build time and pickled —
-    # re-interning 100k+ topic vectors on the driver cost seconds at
-    # the start of EVERY corpus run (a fixed cost at every scaling
-    # level); None on models built before v3
-    interned: object = None
+    # interned context vectors, built once at model-build time and
+    # pickled — re-interning 100k+ topic vectors on the driver cost
+    # seconds at the start of EVERY corpus run (a fixed cost at every
+    # scaling level)
+    interned: InternedContexts
 
     # bump when the pickled layout changes: build_or_load rebuilds stale
     # cache files instead of loading a model missing newer fields
-    VERSION = 3
+    VERSION = 4
     version: int = VERSION
 
     # heap guard: the model is a driver-collected broadcast dim, the same
@@ -62,28 +72,16 @@ class KGModel:
                 f"context-vector dimension too large to broadcast: {n} topics "
                 f"(cap {cls.MAX_CONTEXT_TOPICS}); check the dictionary filters"
             )
-        ctx_map = {
-            r.topic: dict(zip(list(r.ctx_ids), list(r.ctx_ws)))
-            for r in dim.collect()
-        }
-        sf_dim = surface_forms.select("surface", "topic").distinct()
-        n_sf = sf_dim.count()  # fail fast BEFORE the collect (heap guard)
-        if n_sf > 50_000_000:
-            raise MemoryError(f"dictionary too large to broadcast: {n_sf} pairs")
-        pairs = sf_dim.collect()
-        surface_names = sorted({r.surface for r in pairs})
-        topic_names = sorted({r.topic for r in pairs})
+        interned = InternedContexts.of(dim)
+        surface_names, topic_names = name_universes(surface_forms)
         ac = TokenAhoCorasick()
         for s in surface_names:
             ac.add(s)
-        from careers_spark.operators.coherence import InternedContexts
-
         return cls(
             automaton=ac.build(),
-            ctx_map=ctx_map,
             surface_names=surface_names,
             topic_names=topic_names,
-            interned=InternedContexts(ctx_map),
+            interned=interned,
         )
 
     def save(self, path: str) -> None:

@@ -11,65 +11,29 @@ from pyspark.sql import functions as F
 
 from careers_spark import schema as S
 from careers_spark import synth
-from careers_spark.operators import canonicalize as CZ
-from careers_spark.operators import coherence as CO
-from careers_spark.operators import dictionary as D
-from careers_spark.operators import graph as G
-from careers_spark.operators import linking as L
-from careers_spark.operators import mentions as M
+from careers_spark.operators.model import KGModel
+from careers_spark.plans.pipeline import (
+    checkpoint_stage,
+    corpus_phase,
+    dictionary_phase,
+)
 
 SYNTH_CONVS = 30
 SYNTH_DOMAINS = 8
 
 
 def kg_run_in_memory(
-    spark: SparkSession, transcripts: DataFrame, raw: dict[str, DataFrame],
-    tfidf: bool = True,
+    transcripts: DataFrame, raw: dict[str, DataFrame]
 ) -> dict[str, DataFrame]:
-    """dictionary -> mentions -> linking -> coherence -> canonical triples,
-    without stage materialization (for queries()/entry smoke paths).
-    Defaults match KGPipeline.run_corpus: TF-IDF context-cosine linking
-    scores and the second-order/allowedContext dictionary build."""
-    built = D.build_dictionary(raw)
-    # r6 (guide §2.4): the in-memory path has no stage parquet like
-    # KGPipeline, so every consumer (automaton collect, tfidf chain,
-    # sf_pairs collect, resolve, canonical map) re-executed the lazy
-    # dictionary DAG. Materialize the four dictionary-sized outputs
-    # once — same frames KGPipeline persists as stages.
-    resolved_r = built["redirects_resolved"].localCheckpoint(eager=True)
-    sf = built["surface_forms"].localCheckpoint(eager=True)
-    ctx = built["context_vectors"].localCheckpoint(eager=True)
-    link_w = built["link_weights"].localCheckpoint(eager=True)
-    ac = M.build_automaton(sf)
-    mentions = M.detect_mentions(spark, transcripts, ac)
-    cands = L.attach_candidates(mentions, sf)
-    if tfidf:
-        wdf = D.word_doc_freq(transcripts)
-        n_turns = transcripts.count()
-        top_ctx = D.top_contexts(link_w)
-        cands = (
-            L.tfidf_context_scores(cands, transcripts, top_ctx, wdf, n_docs=n_turns)
-            .withColumn("prior", F.col("score"))
-            .drop("score", "ctx_cos")
-        )
-    sf_pairs = sf.select("surface", "topic").distinct().collect()
-    out = CO.resolve(
-        cands, transcripts, ctx, mention_spans=mentions,
-        surface_names=sorted({r.surface for r in sf_pairs}),
-        topic_names=sorted({r.topic for r in sf_pairs}),
-    ).localCheckpoint(eager=False)
-    canon = CZ.canonical_mapping(resolved_r, raw["same_as"])
-    triples = CZ.apply_canonical(
-        CZ.apply_canonical(CO.triples_of(out), canon, "subj"), canon, "obj"
+    """dictionary -> mentions -> linking -> coherence -> canonical triples:
+    the KGPipeline composition with every stage materialized by an eager
+    localCheckpoint instead of a parquet table (for queries()/entry
+    smoke paths)."""
+    dict_outputs = dictionary_phase(checkpoint_stage, raw)
+    model = KGModel.build(
+        dict_outputs["dict_surface_forms"], dict_outputs["dict_context_vectors"]
     )
-    links = CO.links_of(out)
-    return {
-        "mentions": mentions,
-        "links": links,
-        "triples": triples,
-        "nodes": G.build_nodes(links, canon),
-        "edges": G.build_edges(triples),
-    }
+    return corpus_phase(checkpoint_stage, transcripts, dict_outputs, model)
 
 
 # r6 (VERDICT #5): the pinned synth triple set is a CONSTANT of the
@@ -78,24 +42,26 @@ def kg_run_in_memory(
 # kg_contradiction_candidates, kg_type_signatures, kg_rule_confidence,
 # kg_split_contribution) each re-ran the full dictionary+mentions+
 # resolve pipeline just to reconstruct it (~9-14 s apiece at bench
-# scale). Materialize it once per SparkSession (localCheckpoint, fully
-# computed inside the first caller's timed region — nothing persists
-# across sessions or runs) and let the family share it, exactly like
-# the dictionary model artifact is shared. Keyed by SparkSession id;
-# one entry, replaced when a new session appears.
-_TRIPLES_SYNTH_CACHE: list = []  # [(session_id, DataFrame)]
+# scale). Materialize it once per Spark application (localCheckpoint,
+# fully computed inside the first caller's timed region — nothing
+# persists across sessions or runs) and let the family share it, exactly
+# like the dictionary model artifact is shared. Keyed by the application
+# id, not id(spark): a stopped session's id can be reused, and its
+# localCheckpoint blocks died with its context. One entry, replaced when
+# a new application appears.
+_TRIPLES_SYNTH_CACHE: list = []  # [(application_id, DataFrame)]
 
 
 def kg_triples_synth(spark: SparkSession) -> DataFrame:
     """The pinned-golden synth corpus (seed=42, 30 convs, 8 domains)."""
-    key = id(spark)
+    key = spark.sparkContext.applicationId
     if _TRIPLES_SYNTH_CACHE and _TRIPLES_SYNTH_CACHE[0][0] == key:
         return _TRIPLES_SYNTH_CACHE[0][1]
     kb = synth.build_kb(SYNTH_DOMAINS)
     transcripts = spark.createDataFrame(
         synth.gen_transcripts_pdf(kb, SYNTH_CONVS), schema=S.TRANSCRIPTS
     )
-    res = kg_run_in_memory(spark, transcripts, synth.kb_tables(spark, kb))
+    res = kg_run_in_memory(transcripts, synth.kb_tables(spark, kb))
     df = (
         res["triples"]
         .select("conv_id", "turn_idx", "subj", "pred", "obj")
@@ -173,5 +139,5 @@ def corpus_kg_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "redirects": spark.createDataFrame([], schema=S.REDIRECTS),
         "same_as": spark.createDataFrame([], schema="a string, b string"),
     }
-    res = kg_run_in_memory(spark, transcripts, raw)
+    res = kg_run_in_memory(transcripts, raw)
     return res["nodes"].orderBy("node_id")

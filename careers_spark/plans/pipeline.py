@@ -12,6 +12,12 @@ executor-loss or OOM mid-pipeline costs one stage, not the run.
 Locally the tables are parquet; `sources.catalog.Catalog` swaps in
 Iceberg (`writeTo(...).append()`) when a runtime jar is on the
 classpath — the stage protocol is identical.
+
+The KG flow itself is composed once, in `dictionary_phase`,
+`corpus_phase` and its link-and-resolve core `link_and_resolve`, over a
+`stage` callable: KGPipeline materializes each stage to the parquet
+protocol above, the in-memory flagship path and the streaming sink to
+an eager localCheckpoint (`checkpoint_stage`).
 """
 
 from __future__ import annotations
@@ -30,6 +36,7 @@ from careers_spark.operators import dictionary as D
 from careers_spark.operators import graph as G
 from careers_spark.operators import linking as L
 from careers_spark.operators import mentions as M
+from careers_spark.operators.model import KGModel
 
 
 @dataclass
@@ -195,11 +202,19 @@ class KGPipeline:
     # -- the pipeline ---------------------------------------------------------
     # Two phases, mirroring the reference's split between the one-time
     # model build (wikibatch.sh: dump statistics -> binary model) and the
-    # per-document processing that consumes it:
+    # per-document processing that consumes it; both are the module-level
+    # compositions below, run over this pipeline's parquet stage protocol:
     #   run_dictionary : corpus-independent model tables; checkpoint into
     #                    dict_dir so multiple processing runs (and both
     #                    cluster sizes of the scaling bench) share them
     #   run_corpus     : transcripts -> mentions -> ... -> nodes/edges
+
+    def _stages(self, run: PipelineRun):
+        # self.stage is looked up per call, so a stage protocol wrapped on
+        # the class after this pipeline was built still applies
+        return lambda name, compute, partition_by=None: self.stage(
+            run, name, compute, partition_by
+        )
 
     def run_dictionary(
         self,
@@ -208,41 +223,10 @@ class KGPipeline:
         second_order: bool = True,
         context_filter: bool = True,
     ) -> PipelineRun:
-        """Defaults mirror the reference model build: allowedContext
-        filters the raw context table (Disambiguator.scala:43-102) and
-        sparse topics inherit second-order contexts at x0.1
-        (Disambiguator.scala:469-490; precomputed here, which is the
-        reference's own TODO at AmbiguityForest.scala:46-48)."""
         run = run or PipelineRun()
-        st = lambda *a, **k: self.stage(run, *a, **k)  # noqa: E731
-
-        redirects = st(
-            "dict_redirects", lambda: D.resolve_redirects(raw_tables["redirects"])
-        )
-        st(
-            "dict_surface_forms",
-            lambda: D.surface_priors(
-                D.build_surface_forms(raw_tables["surface_forms_raw"], redirects)
-            ),
-        )
-
-        def _link_weights() -> DataFrame:
-            tc = raw_tables["topic_contexts"]
-            if context_filter:
-                tc = D.allowed_context(tc)
-            lw = D.link_weights(tc)
-            if second_order:
-                lw = D.expand_second_order_contexts(lw)
-            return lw
-
-        link_w = st("dict_link_weights", _link_weights)
-        st(
-            "dict_context_vectors",
-            lambda: D.topic_context_vectors(D.top_contexts(link_w)),
-        )
-        st(
-            "canonical_map",
-            lambda: CZ.canonical_mapping(redirects, raw_tables["same_as"]),
+        dictionary_phase(
+            self._stages(run), raw_tables,
+            second_order=second_order, context_filter=context_filter,
         )
         self._flush_lineage()
         return run
@@ -258,173 +242,20 @@ class KGPipeline:
         dense_min_rows: int | None = None,
     ) -> PipelineRun:
         run = run or PipelineRun()
-        st = lambda *a, **k: self.stage(run, *a, **k)  # noqa: E731
-        surface_forms = dict_outputs["dict_surface_forms"]
-        canon = dict_outputs["canonical_map"]
-
         # the broadcastable model artifact (automaton + context map) —
         # cached next to the dictionary checkpoint when available, the
         # analogue of the reference's phraseMap.bin
-        from careers_spark.operators.model import KGModel
-
         if model is None:
             model = KGModel.build(
-                surface_forms, dict_outputs["dict_context_vectors"]
+                dict_outputs["dict_surface_forms"],
+                dict_outputs["dict_context_vectors"],
             )
-
         if repartition:
             transcripts = transcripts.repartition(repartition, "conv_id")
-        transcripts = st(
-            "transcripts",
-            lambda: transcripts.sortWithinPartitions("conv_id", "turn_idx"),
+        corpus_phase(
+            self._stages(run), transcripts, dict_outputs, model,
+            tfidf=tfidf, dense_min_rows=dense_min_rows,
         )
-
-        mentions = st(
-            "mentions",
-            lambda: M.detect_mentions(self.spark, transcripts, model.automaton),
-        )
-
-        # dictionary-coded id dims (lexicographic ints; coherence
-        # tie-break contract): with them, surface/topic STRINGS leave
-        # the corpus phase at the first broadcast join — every TF-IDF
-        # shuffle, the candidates checkpoint, and the resolve cogroup
-        # carry small ints (memory bandwidth is the scaling limiter on
-        # shared-socket hosts, and string keys are its biggest tax)
-        surface_names = getattr(model, "surface_names", None)
-        topic_names = getattr(model, "topic_names", None)
-        coded = surface_names is not None and topic_names is not None
-        if coded:
-            surface_dim, topic_dim = CO.build_id_dims(
-                self.spark, surface_names, topic_names
-            )
-
-        # plain candidate attach is a cheap broadcast join — computed
-        # inside the resolved stage rather than checkpointed. With TF-IDF
-        # scoring on, the candidate DAG carries several fact-side
-        # shuffles, so it IS checkpointed (the cogroup then reads a flat
-        # table instead of recomputing a 4-shuffle DAG inside its job).
-        def _candidates() -> DataFrame:
-            if coded:
-                cands = L.attach_candidates_coded(
-                    mentions, surface_forms, surface_dim, topic_dim
-                )
-            else:
-                cands = L.attach_candidates(mentions, surface_forms)
-            if tfidf:
-                # anchor-prior x TF-IDF context-cosine (north-star
-                # linking score; no term overlap -> identity on priors).
-                # The corpus is tokenized ONCE (turn_terms stage) and the
-                # pass is shared by word_doc_freq + the cosine joins.
-                from careers_spark.functions.text import tokenize_udf
-
-                # cosine dot products only ever touch terms that occur in
-                # topic context NAMES — a dictionary-sized vocabulary. The
-                # scan-side explode is semi-joined to it immediately, so
-                # the materialized turn_terms table is ~vocab-hit tokens,
-                # not the full corpus token stream (30x+ at bench scale).
-                # Per-term doc frequencies (hence idf) are unchanged by
-                # dropping other terms, so scoring is exact.
-                vocab = (
-                    dict_outputs["dict_context_vectors"]
-                    .select(F.explode("ctx_ids").alias("context"))
-                    .distinct()
-                    .select(
-                        F.explode(
-                            F.array_distinct(tokenize_udf(F.col("context")))
-                        ).alias("term")
-                    )
-                    .distinct()
-                )
-                turn_terms = self.stage(
-                    run,
-                    "turn_terms",
-                    lambda: transcripts.select(
-                        "conv_id",
-                        "turn_idx",
-                        F.explode(
-                            F.array_distinct(tokenize_udf(F.col("text")))
-                        ).alias("term"),
-                    ).join(F.broadcast(vocab), "term", "left_semi"),
-                )
-                wdf = self.stage(
-                    run,
-                    "word_doc_freq",
-                    lambda: turn_terms.groupBy(
-                        F.col("term").alias("word")
-                    ).agg(F.count("*").alias("doc_freq")),
-                )
-                n_turns = next(
-                    s.rows for s in run.stages if s.name == "transcripts"
-                )
-                # top-K contexts come from the MATERIALIZED packed
-                # vectors (dict phase) — re-running top_contexts() here
-                # would repeat the window sort over the full link-weights
-                # table inside the corpus phase
-                top_ctx = (
-                    dict_outputs["dict_context_vectors"]
-                    .select(
-                        "topic",
-                        F.explode(F.arrays_zip("ctx_ids", "ctx_ws")).alias("z"),
-                    )
-                    .select(
-                        "topic",
-                        F.col("z.ctx_ids").alias("context"),
-                        F.col("z.ctx_ws").alias("weight1"),
-                    )
-                )
-                if coded:
-                    top_ctx = top_ctx.join(
-                        F.broadcast(topic_dim), "topic"
-                    ).drop("topic")
-                cands = self.stage(
-                    run,
-                    "candidates",
-                    lambda: L.tfidf_context_scores(
-                        cands, transcripts, top_ctx, wdf,
-                        n_docs=n_turns, turn_terms=turn_terms,
-                        topic_col="topic_id" if coded else "topic",
-                    )
-                    .withColumn("prior", F.col("score"))
-                    .drop("score", "ctx_cos"),
-                )
-            return cands
-
-        # computed OUTSIDE the resolved stage timer (the tfidf path runs
-        # its own checkpointed stages; nesting them would double-count)
-        candidates = _candidates()
-        resolved = st(
-            "resolved",
-            lambda: CO.resolve(
-                candidates, transcripts,
-                # prefer the model's pre-interned vectors (pickled with
-                # the model artifact) over re-interning per run
-                getattr(model, "interned", None) or model.ctx_map,
-                mention_spans=mentions,
-                # coded mode: ints on the cogroup shuffle + Arrow boundary,
-                # names broadcast-joined back JVM-side (None on models
-                # built before the dims existed -> legacy string path)
-                surface_names=getattr(model, "surface_names", None),
-                topic_names=getattr(model, "topic_names", None),
-                # dense sim-matrix threshold override (rides the UDF
-                # closure — workers re-import the module, so a module
-                # global would not reach them); None = module default
-                dense_min_rows=dense_min_rows,
-            ),
-        )
-        triples = st(
-            "triples",
-            lambda: CZ.apply_canonical(
-                CZ.apply_canonical(CO.triples_of(resolved), canon, "subj"),
-                canon,
-                "obj",
-            ),
-            partition_by=["pred"],
-        )
-        st(
-            "nodes",
-            lambda: G.build_nodes(CO.links_of(resolved), canon),
-        )
-        st("edges", lambda: G.build_edges(triples), partition_by=["pred"])
         self._flush_lineage()
         return run
 
@@ -438,3 +269,233 @@ class KGPipeline:
         return self.run_corpus(
             transcripts, run.outputs, run=run, repartition=repartition
         )
+
+
+# -- the KG composition ------------------------------------------------------
+# Each function takes `stage(name, compute, partition_by=None) ->
+# DataFrame`, which materializes compute() (see the module docstring).
+
+
+def checkpoint_stage(
+    name: str, compute, partition_by: list[str] | None = None
+) -> DataFrame:
+    """In-memory stage materialization: an eager localCheckpoint. No
+    table, marker or lineage, so `name` and the table layout
+    `partition_by` do not apply."""
+    return compute().localCheckpoint(eager=True)
+
+
+def dictionary_phase(
+    stage,
+    raw_tables: dict[str, DataFrame],
+    second_order: bool = True,
+    context_filter: bool = True,
+) -> dict[str, DataFrame]:
+    """raw synth/dump tables -> the five dictionary stages.
+
+    Defaults mirror the reference model build: allowedContext filters
+    the raw context table (Disambiguator.scala:43-102) and sparse topics
+    inherit second-order contexts at x0.1 (Disambiguator.scala:469-490;
+    precomputed here, which is the reference's own TODO at
+    AmbiguityForest.scala:46-48)."""
+    redirects = stage(
+        "dict_redirects", lambda: D.resolve_redirects(raw_tables["redirects"])
+    )
+    surface_forms = stage(
+        "dict_surface_forms",
+        lambda: D.surface_priors(
+            D.build_surface_forms(raw_tables["surface_forms_raw"], redirects)
+        ),
+    )
+
+    def _link_weights() -> DataFrame:
+        tc = raw_tables["topic_contexts"]
+        if context_filter:
+            tc = D.allowed_context(tc)
+        lw = D.link_weights(tc)
+        if second_order:
+            lw = D.expand_second_order_contexts(lw)
+        return lw
+
+    link_w = stage("dict_link_weights", _link_weights)
+    context_vectors = stage(
+        "dict_context_vectors",
+        lambda: D.topic_context_vectors(D.top_contexts(link_w)),
+    )
+    canon = stage(
+        "canonical_map",
+        lambda: CZ.canonical_mapping(redirects, raw_tables["same_as"]),
+    )
+    return {
+        "dict_redirects": redirects,
+        "dict_surface_forms": surface_forms,
+        "dict_link_weights": link_w,
+        "dict_context_vectors": context_vectors,
+        "canonical_map": canon,
+    }
+
+
+def corpus_phase(
+    stage,
+    transcripts: DataFrame,
+    dict_outputs: dict[str, DataFrame],
+    model: KGModel,
+    tfidf: bool = True,
+    dense_min_rows: int | None = None,
+) -> dict[str, DataFrame]:
+    """transcripts -> mentions -> [turn_terms -> word_doc_freq ->
+    candidates] -> resolved -> canonical triples -> nodes/edges.
+
+    tfidf: anchor-prior x TF-IDF context-cosine linking scores (the
+    north-star linking score; no term overlap -> identity on priors).
+    dense_min_rows: the resolver's dense sim-matrix threshold (None =
+    module default)."""
+    turns = stage(
+        "transcripts",
+        lambda: transcripts.sortWithinPartitions("conv_id", "turn_idx"),
+    )
+    resolved = link_and_resolve(
+        stage, turns, dict_outputs["dict_surface_forms"], model,
+        tfidf_vectors=dict_outputs["dict_context_vectors"] if tfidf else None,
+        dense_min_rows=dense_min_rows,
+    )
+    canon = dict_outputs["canonical_map"]
+    triples = stage(
+        "triples",
+        lambda: CZ.apply_canonical(
+            CZ.apply_canonical(CO.triples_of(resolved), canon, "subj"),
+            canon,
+            "obj",
+        ),
+        partition_by=["pred"],
+    )
+    nodes = stage("nodes", lambda: G.build_nodes(CO.links_of(resolved), canon))
+    edges = stage(
+        "edges", lambda: G.build_edges(triples), partition_by=["pred"]
+    )
+    return {"resolved": resolved, "triples": triples, "nodes": nodes, "edges": edges}
+
+
+def link_and_resolve(
+    stage,
+    transcripts: DataFrame,
+    surface_forms: DataFrame,
+    model: KGModel,
+    tfidf_vectors: DataFrame | None = None,
+    dense_min_rows: int | None = None,
+) -> DataFrame:
+    """transcripts -> mentions -> coded candidates -> resolved.
+
+    Candidates carry dictionary-coded ids (lexicographic ints; the
+    coherence tie-break contract): surface/topic STRINGS leave the plan
+    at the first broadcast join, so every TF-IDF shuffle, the candidates
+    checkpoint and the resolve cogroup carry small ints (memory
+    bandwidth is the scaling limiter on shared-socket hosts, and string
+    keys are its biggest tax). Names join back inside `resolved`.
+
+    tfidf_vectors: the dictionary's packed context vectors; given, the
+    candidates are re-scored by anchor prior x TF-IDF context cosine
+    (stages turn_terms, word_doc_freq, candidates). The streaming sink
+    passes None, on purpose: idf is a corpus-wide statistic, so a
+    per-poll idf would make a conversation's links depend on which poll
+    delivered it. Linked on anchor priors, a conversation resolves from
+    its own turns and the dictionary alone, whichever poll carries it.
+    """
+    spark = transcripts.sparkSession
+    mentions = stage(
+        "mentions", lambda: M.detect_mentions(spark, transcripts, model.automaton)
+    )
+    surface_dim, topic_dim = CO.build_id_dims(
+        spark, model.surface_names, model.topic_names
+    )
+    # plain candidate attach is a cheap broadcast join — computed inside
+    # the resolved stage rather than checkpointed. TF-IDF scoring adds
+    # several fact-side shuffles, so its candidates ARE checkpointed (the
+    # cogroup then reads a flat table instead of recomputing a 4-shuffle
+    # DAG inside its job).
+    candidates = L.attach_candidates_coded(
+        mentions, surface_forms, surface_dim, topic_dim
+    )
+    if tfidf_vectors is not None:
+        candidates = _tfidf_candidates(
+            stage, transcripts, candidates, tfidf_vectors, topic_dim
+        )
+    return stage(
+        "resolved",
+        lambda: CO.resolve(
+            candidates, transcripts, model.interned,
+            surface_names=model.surface_names,
+            topic_names=model.topic_names,
+            mention_spans=mentions,
+            # dense sim-matrix threshold override (rides the UDF
+            # closure — workers re-import the module, so a module
+            # global would not reach them); None = module default
+            dense_min_rows=dense_min_rows,
+        ),
+    )
+
+
+def _tfidf_candidates(
+    stage,
+    transcripts: DataFrame,
+    candidates: DataFrame,
+    context_vectors: DataFrame,
+    topic_dim: DataFrame,
+) -> DataFrame:
+    """Candidates re-scored by anchor prior x TF-IDF context cosine. The
+    corpus is tokenized ONCE (turn_terms stage) and the pass is shared
+    by word_doc_freq + the cosine joins."""
+    from careers_spark.functions.text import tokenize_udf
+
+    # cosine dot products only ever touch terms that occur in topic
+    # context NAMES — a dictionary-sized vocabulary. The scan-side
+    # explode is semi-joined to it immediately, so the materialized
+    # turn_terms table is ~vocab-hit tokens, not the full corpus token
+    # stream (30x+ at bench scale). Per-term doc frequencies (hence idf)
+    # are unchanged by dropping other terms, so scoring is exact.
+    vocab = (
+        context_vectors.select(F.explode("ctx_ids").alias("context"))
+        .distinct()
+        .select(
+            F.explode(F.array_distinct(tokenize_udf(F.col("context")))).alias("term")
+        )
+        .distinct()
+    )
+    turn_terms = stage(
+        "turn_terms",
+        lambda: transcripts.select(
+            "conv_id",
+            "turn_idx",
+            F.explode(F.array_distinct(tokenize_udf(F.col("text")))).alias("term"),
+        ).join(F.broadcast(vocab), "term", "left_semi"),
+    )
+    wdf = stage(
+        "word_doc_freq",
+        lambda: turn_terms.groupBy(F.col("term").alias("word")).agg(
+            F.count("*").alias("doc_freq")
+        ),
+    )
+    n_turns = transcripts.count()
+    # top-K contexts come from the MATERIALIZED packed vectors (dict
+    # phase) — re-running top_contexts() here would repeat the window
+    # sort over the full link-weights table inside the corpus phase
+    top_ctx = (
+        context_vectors.select(
+            "topic", F.explode(F.arrays_zip("ctx_ids", "ctx_ws")).alias("z")
+        )
+        .select(
+            "topic",
+            F.col("z.ctx_ids").alias("context"),
+            F.col("z.ctx_ws").alias("weight1"),
+        )
+        .join(F.broadcast(topic_dim), "topic")
+        .drop("topic")
+    )
+    return stage(
+        "candidates",
+        lambda: L.tfidf_context_scores(
+            candidates, turn_terms, top_ctx, wdf, n_docs=n_turns
+        )
+        .withColumn("prior", F.col("score"))
+        .drop("score", "ctx_cos"),
+    )

@@ -8,12 +8,14 @@ applications/WebCVProcess.scala:213-298). The Spark-native equivalent:
 
   - append to the batch transcripts table (the pipeline then runs in
     its normal checkpointed batch mode per micro-batch window), or
-  - `foreachBatch` incremental mention detection: the batch operators
-    are reused verbatim on each micro-batch (mention detection is
-    per-turn stateless, so streaming it is embarrassing; coherence
-    needs the whole conversation, so it stays in the batch/compaction
-    layer — same split as the reference's online-annotate vs offline
-    model-build).
+  - `foreachBatch` incremental KG construction (stream_kg_incremental):
+    each poll runs the batch pipeline's own link-and-resolve composition
+    (careers_spark.plans.pipeline.link_and_resolve: mentions -> coded
+    candidates -> coherence resolve) over its fresh conversations —
+    coherence needs the whole conversation, and a conversation arrives
+    whole within one poll. It links without TF-IDF; why is stated once,
+    in link_and_resolve's docstring. stream_mentions_to_parquet is the
+    mention-scan-only variant.
 
 Also provides a streaming per-window mention-rate aggregate as the
 monitoring query (tumbling window + watermark).
@@ -104,14 +106,21 @@ def make_incremental_sink(
 
     from pyspark.sql import Window
 
-    from careers_spark.operators.coherence import links_of, resolve
+    from careers_spark.operators.coherence import InternedContexts, links_of
     from careers_spark.operators.digests import (
         document_digests,
         incremental_digest_pairs,
     )
-    from careers_spark.operators.linking import attach_candidates
-    from careers_spark.operators.mentions import detect_mentions
+    from careers_spark.operators.model import KGModel, name_universes
+    from careers_spark.plans.pipeline import checkpoint_stage, link_and_resolve
 
+    # the resolver's coded ids need the dictionary's name universes:
+    # one distinct (surface, topic) collect per sink, not per poll
+    model = KGModel(
+        automaton,
+        *name_universes(surface_forms),
+        InternedContexts.of(context_vectors),
+    )
     processed_dir = os.path.join(out_dir, "processed")
     resolved_dir = os.path.join(out_dir, "resolved")
     digests_dir = os.path.join(out_dir, "digests")
@@ -138,9 +147,7 @@ def make_incremental_sink(
             return
 
         # -- processCVs ---------------------------------------------------
-        mentions = detect_mentions(spark, fresh, automaton)
-        cands = attach_candidates(mentions, surface_forms)
-        out = resolve(cands, fresh, context_vectors).localCheckpoint(eager=True)
+        out = link_and_resolve(checkpoint_stage, fresh, surface_forms, model)
         # empty outputs are SKIPPED, not written: an epoch dir holding
         # only a _SUCCESS marker would later fail schema inference on
         # the store read and poison every subsequent batch (a batch of

@@ -11,8 +11,8 @@ from careers_spark import schema as S
 from careers_spark import synth
 from careers_spark.operators import coherence as CO
 from careers_spark.operators import dictionary as D
-from careers_spark.operators import linking as L
-from careers_spark.operators import mentions as M
+from careers_spark.operators.model import KGModel
+from careers_spark.plans.pipeline import checkpoint_stage, link_and_resolve
 
 
 def _run_resolution(spark, texts: list[str]):
@@ -36,10 +36,9 @@ def _run_resolution(spark, texts: list[str]):
     resolved_r = D.resolve_redirects(raw["redirects"])
     sf = D.surface_priors(D.build_surface_forms(raw["surface_forms_raw"], resolved_r))
     ctx_vecs = D.topic_context_vectors(D.top_contexts(D.link_weights(raw["topic_contexts"])))
-    ac = M.build_automaton(sf)
-    mentions = M.detect_mentions(spark, transcripts, ac)
-    cands = L.attach_candidates(mentions, sf)
-    out = CO.resolve(cands, transcripts, ctx_vecs)
+    out = link_and_resolve(
+        checkpoint_stage, transcripts, sf, KGModel.build(sf, ctx_vecs)
+    )
     links = {
         (r.turn_idx, r.start, r.end): r.topic for r in CO.links_of(out).collect()
     }
@@ -118,10 +117,9 @@ def test_triple_extraction_gap_patterns(spark):
     ctx_vecs = D.topic_context_vectors(
         D.top_contexts(D.link_weights(raw["topic_contexts"]))
     )
-    ac = M.build_automaton(sf)
-    mentions = M.detect_mentions(spark, transcripts, ac)
-    cands = L.attach_candidates(mentions, sf)
-    out = CO.resolve(cands, transcripts, ctx_vecs)
+    out = link_and_resolve(
+        checkpoint_stage, transcripts, sf, KGModel.build(sf, ctx_vecs)
+    )
     triples = CO.triples_of(out)
     preds = {r.pred for r in triples.collect()}
     assert preds <= {"works_at", "located_in", "studied_at", "founded", "uses", "acquired"}
@@ -137,16 +135,18 @@ def test_dense_path_through_spark_stage(spark):
     import careers_spark.operators.coherence as comod
 
     n_m = 100
+    surfaces = sorted(f"s{m}" for m in range(n_m))
+    topics = ["Main:TA", "Main:TB"]
     rows = []
     for m in range(n_m):
         t, s = divmod(m, 10)
-        for topic, pr in (("Main:TA", 0.6), ("Main:TB", 0.4)):
-            rows.append(("c1", t, 3 * s, 3 * s, f"s{m}", topic, pr))
+        for topic_id, pr in ((0, 0.6), (1, 0.4)):
+            rows.append(("c1", t, 3 * s, 3 * s, surfaces.index(f"s{m}"), topic_id, pr))
     cands = spark.createDataFrame(
         pd.DataFrame(
             rows,
             columns=["conv_id", "turn_idx", "start", "end",
-                     "surface", "topic", "prior"],
+                     "surf_id", "topic_id", "prior"],
         )
     )
     transcripts = spark.createDataFrame(
@@ -168,7 +168,11 @@ def test_dense_path_through_spark_stage(spark):
         # the threshold rides the UDF closure (resolve's dense_min_rows
         # param), so it reaches the python WORKER processes — a module
         # monkeypatch would not (workers re-import the module)
-        out = CO.resolve(cands, transcripts, ctx, dense_min_rows=dense_min_rows)
+        out = CO.resolve(
+            cands, transcripts, ctx,
+            surface_names=surfaces, topic_names=topics,
+            dense_min_rows=dense_min_rows,
+        )
         return sorted(
             (r.turn_idx, r.start, r.topic, round(r.score, 9))
             for r in CO.links_of(out).collect()

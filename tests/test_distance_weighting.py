@@ -118,11 +118,15 @@ def test_flag_through_spark_stage(spark):
         ("c1", 0, 2, 2, "p1", "P1", 1.0),
         ("c1", 0, 40, 40, "p2", "P2", 1.0),
     ]
+    # dictionary-coded candidates: ids are positions in the sorted names
+    surfaces = sorted({r[4] for r in rows})
+    topics = sorted({r[5] for r in rows})
     cands = spark.createDataFrame(
         pd.DataFrame(
-            rows,
+            [(c, t, s, e, surfaces.index(sf), topics.index(tp), pr)
+             for c, t, s, e, sf, tp, pr in rows],
             columns=["conv_id", "turn_idx", "start", "end",
-                     "surface", "topic", "prior"],
+                     "surf_id", "topic_id", "prior"],
         )
     )
     transcripts = spark.createDataFrame(
@@ -141,7 +145,11 @@ def test_flag_through_spark_stage(spark):
     ctx = {"A": {"cx": 1.0}, "P2": {"cx": 1.0}, "B": {"cy": 1.0}, "P1": {"cy": 0.5}}
 
     def winner(flag):
-        out = CO.resolve(cands, transcripts, ctx, distance_weighting=flag)
+        out = CO.resolve(
+            cands, transcripts, ctx,
+            surface_names=surfaces, topic_names=topics,
+            distance_weighting=flag,
+        )
         links = {(r.turn_idx, r.start): r.topic for r in CO.links_of(out).collect()}
         return links[(0, 0)]
 

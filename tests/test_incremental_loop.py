@@ -8,17 +8,23 @@ Structured-Streaming micro-batches over stream_kg_incremental:
     cold batch run over the full corpus;
   - the union of both batches' incremental matches must equal the cold
     all-pairs digest similarity at the same threshold (new x all +
-    old x new over two polls covers every unordered pair exactly once).
+    old x new over two polls covers every unordered pair exactly once);
+  - the two polls' triples equal a batch KGPipeline run over the same
+    conversations.
 """
 
 import pytest
 
 from careers_spark import synth
 from careers_spark.operators import coherence as CO
-from careers_spark.operators import dictionary as D
-from careers_spark.operators import linking as L
-from careers_spark.operators import mentions as M
 from careers_spark.operators.digests import digest_similarity, document_digests
+from careers_spark.operators.model import KGModel
+from careers_spark.plans.pipeline import (
+    KGPipeline,
+    checkpoint_stage,
+    dictionary_phase,
+    link_and_resolve,
+)
 from careers_spark.streaming import ingest
 
 N_CONVS = 24
@@ -28,33 +34,35 @@ MIN_SIM = 0.1
 @pytest.fixture(scope="module")
 def corpus(spark):
     kb = synth.build_kb(8)
-    built = D.build_dictionary(synth.kb_tables(spark, kb))
-    sf = built["surface_forms"].localCheckpoint(eager=True)
-    ctx = built["context_vectors"]
+    built = dictionary_phase(checkpoint_stage, synth.kb_tables(spark, kb))
+    sf = built["dict_surface_forms"]
+    ctx = built["dict_context_vectors"]
     transcripts = synth.gen_transcripts(spark, kb, N_CONVS).localCheckpoint(
         eager=True
     )
-    ac = M.build_automaton(sf)
-    return sf, ctx, transcripts, ac
+    return sf, ctx, transcripts, KGModel.build(sf, ctx), kb
 
 
-def test_two_batch_incremental_equals_cold_run(spark, corpus, tmp_path):
+def _two_polls(spark, corpus, tmp_path):
+    """Poll 1 delivers the first half of the conversations; poll 2
+    re-delivers the full corpus (the second half is fresh, the first
+    half must be gated away). Returns (out_dir, first-half conv_ids)."""
     from pyspark.sql import functions as F
 
-    sf, ctx, transcripts, ac = corpus
+    sf, ctx, transcripts, model, _ = corpus
     convs = sorted(r.conv_id for r in transcripts.select("conv_id").distinct().collect())
     half = set(convs[: len(convs) // 2])
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
 
-    def poll(batch_no, frame):
+    def poll(frame):
         frame.write.mode("append").parquet(in_dir)
         q = ingest.stream_kg_incremental(
             spark,
             in_dir,
             out_dir,
             str(tmp_path / "ckpt"),
-            ac,
+            model.automaton,
             sf,
             ctx,
             once=True,
@@ -62,10 +70,15 @@ def test_two_batch_incremental_equals_cold_run(spark, corpus, tmp_path):
         )
         q.awaitTermination(300)
 
-    # poll 1: first half; poll 2: full corpus re-delivered (the second
-    # half is fresh, the first half must be gated away)
-    poll(1, transcripts.filter(F.col("conv_id").isin(list(half))))
-    poll(2, transcripts)
+    poll(transcripts.filter(F.col("conv_id").isin(list(half))))
+    poll(transcripts)
+    return out_dir, half
+
+
+def test_two_batch_incremental_equals_cold_run(spark, corpus, tmp_path):
+    sf, ctx, transcripts, model, _ = corpus
+    convs = sorted(r.conv_id for r in transcripts.select("conv_id").distinct().collect())
+    out_dir, half = _two_polls(spark, corpus, tmp_path)
 
     # -- the gate: batch 2 processed only fresh conv_ids -------------------
     processed = spark.read.parquet(f"{out_dir}/processed").collect()
@@ -79,8 +92,7 @@ def test_two_batch_incremental_equals_cold_run(spark, corpus, tmp_path):
     assert by_epoch[epochs[1]] == set(convs) - half
 
     # -- resolved triples identical to a cold batch run --------------------
-    cands = L.attach_candidates(M.detect_mentions(spark, transcripts, ac), sf)
-    cold = CO.resolve(cands, transcripts, ctx)
+    cold = link_and_resolve(checkpoint_stage, transcripts, sf, model)
     inc = spark.read.parquet(f"{out_dir}/resolved")
     cols = cold.columns
     assert inc.select(cols).exceptAll(cold).isEmpty()
@@ -107,6 +119,29 @@ def test_two_batch_incremental_equals_cold_run(spark, corpus, tmp_path):
         assert abs(got[k] - want[k]) < 1e-6
 
 
+def test_two_polls_equal_batch_pipeline(spark, corpus, tmp_path):
+    """The streaming sink and KGPipeline.run_corpus share one
+    link-and-resolve composition; over the same synth conversations the
+    two polls' triples equal the batch run's (TF-IDF on in batch: the
+    synth turns hold no context-name words, so it is the identity)."""
+    _, _, transcripts, _, kb = corpus
+    out_dir, _ = _two_polls(spark, corpus, tmp_path)
+    cols = ["conv_id", "turn_idx", "subj", "pred", "obj"]
+    stream = {
+        tuple(r)
+        for r in spark.read.parquet(f"{out_dir}/resolved")
+        .filter("kind = 'triple'")
+        .selectExpr("conv_id", "turn_idx", "topic as subj", "pred", "obj")
+        .collect()
+    }
+    run = KGPipeline(spark, str(tmp_path / "batch")).run(
+        transcripts, synth.kb_tables(spark, kb)
+    )
+    batch = {tuple(r) for r in run.outputs["triples"].select(cols).collect()}
+    assert batch  # non-trivial corpus
+    assert stream == batch
+
+
 def test_replay_is_idempotent(spark, corpus, tmp_path):
     """Exactly-once: replaying a batch from ANY partially-written state
     (the streaming checkpoint replays a failed batch whole) converges to
@@ -116,14 +151,14 @@ def test_replay_is_idempotent(spark, corpus, tmp_path):
 
     from pyspark.sql import functions as F
 
-    sf, ctx, transcripts, ac = corpus
+    sf, ctx, transcripts, model, _ = corpus
     convs = sorted(
         r.conv_id for r in transcripts.select("conv_id").distinct().collect()
     )
     half = set(convs[: len(convs) // 2])
     out_dir = str(tmp_path / "out")
     sink = ingest.make_incremental_sink(
-        spark, out_dir, ac, sf, ctx, min_similarity=MIN_SIM
+        spark, out_dir, model.automaton, sf, ctx, min_similarity=MIN_SIM
     )
     b1 = transcripts.filter(F.col("conv_id").isin(list(half)))
     b2 = transcripts  # full corpus re-delivered; second half is fresh
@@ -170,10 +205,10 @@ def test_zero_hit_batch_does_not_poison_stores(spark, corpus, tmp_path):
     reads as 'no data yet' rather than a schema-inference error."""
     from pyspark.sql import functions as F
 
-    sf, ctx, transcripts, ac = corpus
+    sf, ctx, transcripts, model, _ = corpus
     out_dir = str(tmp_path / "out")
     sink = ingest.make_incremental_sink(
-        spark, out_dir, ac, sf, ctx, min_similarity=MIN_SIM
+        spark, out_dir, model.automaton, sf, ctx, min_similarity=MIN_SIM
     )
     # batch 0: same schema, filler-only text -> zero mentions
     blank = transcripts.limit(40).withColumn(

@@ -92,10 +92,13 @@ def test_tfidf_pipeline_preserves_pr(spark, kb, tmp_path):
     )
     raw = synth.kb_tables(spark, kb)
     p1 = KGPipeline(spark, str(tmp_path / "a"))
-    r_base = p1.run(transcripts, raw)
+    d1 = p1.run_dictionary(raw)
+    r_base = p1.run_corpus(transcripts, d1.outputs, tfidf=False)
+    assert "candidates" not in r_base.outputs  # the base side links on priors
     p2 = KGPipeline(spark, str(tmp_path / "b"))
     d = p2.run_dictionary(raw)
     r_tfidf = p2.run_corpus(transcripts, d.outputs, tfidf=True)
+    assert "candidates" in r_tfidf.outputs
     t1 = r_base.outputs["triples"].select("conv_id", "subj", "pred", "obj")
     t2 = r_tfidf.outputs["triples"].select("conv_id", "subj", "pred", "obj")
     assert t1.exceptAll(t2).count() == 0

@@ -28,30 +28,6 @@ def test_filter_pushdown_to_scan(spark):
     assert "ReadSchema" in plan
 
 
-def test_candidates_join_is_broadcast(spark):
-    from careers_spark.operators import linking as L
-
-    mentions = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "conv_id": ["c1"],
-                "turn_idx": pd.array([0], dtype="int32"),
-                "start": pd.array([0], dtype="int32"),
-                "end": pd.array([0], dtype="int32"),
-                "surface": ["rice"],
-            }
-        )
-    )
-    sf = spark.createDataFrame(
-        pd.DataFrame(
-            {"surface": ["rice"], "topic": ["Main:Rice"], "prior": [1.0]}
-        )
-    )
-    plan = _plan(L.attach_candidates(mentions, sf))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_word_doc_freq_partial_aggregation(spark):
     from careers_spark.operators import dictionary as D
 

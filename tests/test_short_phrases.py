@@ -20,16 +20,20 @@ from careers_spark import synth
 from careers_spark.golden import short_phrases as SP
 from careers_spark.operators import coherence as CO
 from careers_spark.operators import dictionary as D
-from careers_spark.operators import linking as L
-from careers_spark.operators import mentions as M
+from careers_spark.operators.model import KGModel
+from careers_spark.plans.pipeline import (
+    checkpoint_stage,
+    dictionary_phase,
+    link_and_resolve,
+)
 
 
 def _resolve_all(spark):
     kb = SP.golden_kb()
     raw = synth.kb_tables(spark, kb)
-    built = D.build_dictionary(raw)
-    sf = built["surface_forms"]
-    ctx_vecs = built["context_vectors"]
+    built = dictionary_phase(checkpoint_stage, raw)
+    sf = built["dict_surface_forms"]
+    ctx_vecs = built["dict_context_vectors"]
 
     rows = [(c["id"], 0, "user", c["phrase"], "", i) for i, c in enumerate(SP.CASES)]
     pdf = pd.DataFrame(
@@ -39,10 +43,9 @@ def _resolve_all(spark):
     pdf["ts"] = pd.to_datetime(pdf.pop("ts_epoch"), unit="s")
     transcripts = spark.createDataFrame(pdf, schema=S.TRANSCRIPTS)
 
-    ac = M.build_automaton(sf)
-    mentions = M.detect_mentions(spark, transcripts, ac)
-    cands = L.attach_candidates(mentions, sf)
-    out = CO.resolve(cands, transcripts, ctx_vecs)
+    out = link_and_resolve(
+        checkpoint_stage, transcripts, sf, KGModel.build(sf, ctx_vecs)
+    )
     got: dict[str, set] = {}
     for r in CO.links_of(out).collect():
         got.setdefault(r.conv_id, set()).add(r.topic)

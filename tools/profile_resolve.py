@@ -9,6 +9,7 @@ sys.path.insert(0, "/root/repo")
 import pandas as pd  # noqa: E402
 
 from careers_spark.operators import coherence as CO  # noqa: E402
+from careers_spark.operators.model import KGModel  # noqa: E402
 from careers_spark.session import get_spark  # noqa: E402
 
 out = open("/tmp/resolve_scale.txt", "w")
@@ -25,6 +26,11 @@ for cpus in (8, 32):
         "conv_id", "turn_idx", "text"
     )
     ctx = spark.read.parquet("/tmp/kg_scale_dict/dict_context_vectors")
+    # the candidates table is dictionary-coded: resolve needs the
+    # model's name universes to join names back
+    model = KGModel.build(
+        spark.read.parquet("/tmp/kg_scale_dict/dict_surface_forms"), ctx
+    )
 
     # monkeypatch fn wrapper to time python work per conversation
     orig_resolve = CO._resolve_conv
@@ -43,7 +49,10 @@ for cpus in (8, 32):
 
     comod._resolve_conv = timed
     t0 = time.monotonic()
-    n = CO.resolve(cand, turns, ctx).count()
+    n = CO.resolve(
+        cand, turns, model.interned,
+        surface_names=model.surface_names, topic_names=model.topic_names,
+    ).count()
     wall = time.monotonic() - t0
     comod._resolve_conv = orig_resolve
     print(f"cpus={cpus} wall={wall:.1f}s rows={n}", file=out, flush=True)
