@@ -50,12 +50,17 @@ Performance posture (the stage is the pipeline's only Python hot path):
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from careers_spark.functions.text import tokenize_py
 from careers_spark.synth import PRED_PATTERNS
+
+if TYPE_CHECKING:
+    from careers_spark.operators.model import KGModel
 
 # int-coded wire schema: global surface/topic ids (lexicographic over
 # the dictionary universes), so only small ints cross the cogroup
@@ -102,13 +107,10 @@ class InternedContexts:
 
     @classmethod
     def of(cls, context_vectors) -> "InternedContexts":
-        """Intern a (topic, ctx_ids, ctx_ws) DataFrame (driver collect)
-        or a {topic: {context: weight}} dict; interned input passes
-        through."""
+        """Intern a (topic, ctx_ids, ctx_ws) DataFrame (driver collect);
+        interned input passes through."""
         if isinstance(context_vectors, cls):
             return context_vectors
-        if isinstance(context_vectors, dict):
-            return cls(context_vectors)
         return cls(
             {
                 r.topic: dict(zip(list(r.ctx_ids), list(r.ctx_ws)))
@@ -182,24 +184,14 @@ def build_id_dims(spark, surface_names: list[str], topic_names: list[str]):
     return surface_dim, topic_dim
 
 
-def _build_sites(
-    spans: list[tuple[int, int, int]], presorted: bool = False
-) -> list[list[int]]:
-    """Group mention indices into overlap sites. spans: (turn, start, end).
-    presorted=True skips the sort when the caller built spans in
-    (turn, start, end) order already (the resolver does — mention
-    boundaries come from rows sorted on exactly that key)."""
-    if presorted:
-        order: "range | list[int]" = range(len(spans))
-    else:
-        order = sorted(
-            range(len(spans)), key=lambda i: (spans[i][0], spans[i][1], spans[i][2])
-        )
+def _build_sites(spans: list[tuple[int, int, int]]) -> list[list[int]]:
+    """Group mention indices into overlap sites. spans: (turn, start,
+    end), sorted on that key (the resolver's mention boundaries come
+    from rows sorted on exactly that key)."""
     sites: list[list[int]] = []
     cur: list[int] = []
     cur_turn, cur_end = None, -1
-    for i in order:
-        t, s, e = spans[i]
+    for i, (t, s, e) in enumerate(spans):
         if cur and t == cur_turn and s <= cur_end:
             cur.append(i)
             cur_end = max(cur_end, e)
@@ -268,6 +260,11 @@ def _alternatives(site: list[int], spans: list[tuple[int, int, int]]) -> list[li
     # dedupe
     uniq = {tuple(a) for a in alts}
     return [list(a) for a in sorted(uniq)]
+
+
+# Per-conversation cost guard in candidate rows: the reference's
+# maxNumberOfWords=3000 analogue (AmbiguityForest.scala:105).
+_MAX_ROWS_PER_CONV = 3000
 
 
 def _conv_windows(
@@ -353,7 +350,9 @@ def _conv_windows(
 
 
 # Window size where the dense sim-matrix path replaces the scalar loop.
-# Deployment knob (KG_DENSE_MIN_ROWS): the dense path trades python-op
+# Deployment knob, set only by the KG_DENSE_MIN_ROWS env var (python
+# workers read it at import; _resolve_conv reads this global at call
+# time, so in-process tests can patch it). The dense path trades python-op
 # count for MEMORY BANDWIDTH (matvecs + gathers stream G^2 floats), so
 # its win depends on topology — on an executor with its own socket it
 # is strictly faster (2x at 90 rows to 25x at 3000, measured), while on
@@ -486,10 +485,8 @@ def _resolve_conv(
     turns_text: dict[int, str],
     ctx: InternedContexts,
     out_rows: list[tuple],
-    distance_weighting: bool = False,
-    dense_min_rows: int | None = None,
 ) -> None:
-    """Resolve one conversation from the batch's presorted column LISTS
+    """Resolve one conversation from the batch's sorted column LISTS
     (rows [lo, hi)). Plain-python lists, not numpy slices — per-element
     ndarray indexing boxes a numpy scalar per access, which measurably
     dominates at one row per microsecond; tolist() happens once per
@@ -511,7 +508,7 @@ def _resolve_conv(
 
     spans = [(turn[m_first[i]], start[m_first[i]], end[m_first[i]])
              for i in range(n)]
-    sites = _build_sites(spans, presorted=True)
+    sites = _build_sites(spans)
     site_of = [0] * n
     for si, site in enumerate(sites):
         for i in site:
@@ -528,29 +525,10 @@ def _resolve_conv(
             row_site[r - lo] = site_of[i]
             row_mention[r - lo] = i
 
-    # W2 — Normal-pdf mention-distance weighting (AmbiguityForest.scala:
-    # 806-811): distanceWeight = 0.2 + N(0,5).density(d)/density(0)
-    # [+ 0.0 * the sigma=10 term, coefficient zero in the reference] with
-    # d = difference of span token centers. The reference computes it but
-    # multiplies it OUT (`linkWeight //* distanceWeight`, :811), so the
-    # default here is OFF and flag-off output is bit-identical. Mentions
-    # in different turns have no shared token axis; the Gaussian at any
-    # cross-turn distance is ~0, so they take the 0.2 floor.
-    dw = None
-    if distance_weighting:
-        from math import exp
-
-        cen = [(start[r] + end[r]) / 2.0 for r in range(lo, hi)]
-
-        def dw(rl: int, r2l: int) -> float:
-            if turn[lo + rl] != turn[lo + r2l]:
-                return 0.2
-            d = cen[rl] - cen[r2l]
-            return 0.2 + exp(-d * d / 50.0)
-
-    if dense_min_rows is None:
-        dense_min_rows = _DENSE_MIN_ROWS
-    if dw is None and hi - lo >= dense_min_rows:
+    # no mention-distance weighting (W2, AmbiguityForest.scala:806-811):
+    # the reference computes it but multiplies it out (`linkWeight //*
+    # distanceWeight`, :811)
+    if hi - lo >= _DENSE_MIN_ROWS:
         supp, active = _dense_support_and_prune(
             lo, hi, topic_code, topic_gid, prior,
             row_site, row_mention, m_first, ctx,
@@ -561,16 +539,10 @@ def _resolve_conv(
             s = 0.0
             gr = topic_gid[r]
             sr = row_site[r - lo]
-            if dw is None:
-                for r2 in range(lo, hi):
-                    if row_site[r2 - lo] == sr:
-                        continue  # same-site exclusion (AmbiguityForest.scala:783-784)
-                    s += sim(gr, topic_gid[r2]) * prior[r2]
-            else:
-                for r2 in range(lo, hi):
-                    if row_site[r2 - lo] == sr:
-                        continue
-                    s += sim(gr, topic_gid[r2]) * prior[r2] * dw(r - lo, r2 - lo)
+            for r2 in range(lo, hi):
+                if row_site[r2 - lo] == sr:
+                    continue  # same-site exclusion (AmbiguityForest.scala:783-784)
+                s += sim(gr, topic_gid[r2]) * prior[r2]
             supp[r - lo] = s
 
         # --- greedy elimination with peer down-weighting -------------------
@@ -605,18 +577,11 @@ def _resolve_conv(
             if n_active[mi] == 1:
                 n_multi -= 1
             gw, pw, sw = topic_gid[worst_r], prior[worst_r], row_site[rl]
-            if dw is None:
-                for r2 in range(lo, hi):
-                    r2l = r2 - lo
-                    if not active[r2l] or row_site[r2l] == sw:
-                        continue
-                    supp[r2l] -= sim(topic_gid[r2], gw) * pw
-            else:
-                for r2 in range(lo, hi):
-                    r2l = r2 - lo
-                    if not active[r2l] or row_site[r2l] == sw:
-                        continue
-                    supp[r2l] -= sim(topic_gid[r2], gw) * pw * dw(r2l, rl)
+            for r2 in range(lo, hi):
+                r2l = r2 - lo
+                if not active[r2l] or row_site[r2l] == sw:
+                    continue
+                supp[r2l] -= sim(topic_gid[r2], gw) * pw
 
     final_code = [0] * n
     final_score = [0.0] * n
@@ -699,75 +664,52 @@ def _rows_to_pdf_coded(rows: list[tuple]) -> pd.DataFrame:
 def resolve(
     candidates: DataFrame,
     transcripts: DataFrame,
-    context_vectors,  # DataFrame (topic, ctx_ids, ctx_ws) | dict | InternedContexts
-    *,
-    surface_names: list[str],
-    topic_names: list[str],
-    n_buckets: int | None = None,
-    mention_spans: DataFrame | None = None,
-    max_rows_per_conv: int = 3000,
-    distance_weighting: bool = False,
-    dense_min_rows: int | None = None,
+    mention_spans: DataFrame,
+    model: "KGModel",
+    surface_dim: DataFrame,
+    topic_dim: DataFrame,
 ) -> DataFrame:
     """Cogrouped per-conversation resolution, bucket-batched.
 
     candidates: output of linking.attach_candidates_coded — slim rows
         only (conv_id, turn_idx, start, end, surf_id, topic_id, prior),
-        coded against surface_names/topic_names; context
-        vectors ride a BROADCAST, not the shuffle (carrying 30-element
-        arrays per candidate row multiplied shuffle volume ~10x and made
-        this stage I/O-bound).
+        coded against the model's universes; context vectors ride a
+        BROADCAST, not the shuffle (carrying 30-element arrays per
+        candidate row multiplied shuffle volume ~10x and made this stage
+        I/O-bound).
     transcripts: (conv_id, turn_idx, text) — needed for gap tokens; only
         turns carrying >= 2 mention spans are shipped (slim semi-join —
         chosen mentions are a subset of mention spans, so the gap pass
         never needs the others).
-    context_vectors: (topic, ctx_ids, ctx_ws) dimension table, or its
-        dict / InternedContexts form
+    mention_spans: the (cheap, usually checkpointed) mentions the
+        candidates were attached to; the gap-eligible turns come from
+        them, since deriving them from `candidates` would evaluate the
+        candidate DAG twice when linking carries the TF-IDF joins.
+    model: the KGModel — its interned context vectors and its sorted
+        topic universe, whose positions are the candidates' topic_id.
+    surface_dim/topic_dim: build_id_dims over the model's universes.
+        Only ints cross the Arrow boundary in both directions, and names
+        are broadcast-joined back JVM-side afterwards; ids are assigned
+        in sorted order, so integer tie-breaks are name-ordered.
     Returns the unified link/triple frame: (conv_id, turn_idx, kind,
     start, end, surface, topic, score, pred, obj).
 
     Conversations are independent, so they are grouped into hash buckets
-    and one pandas group carries many conversations — this amortizes the
-    per-group Arrow/Python round-trip that dominates at small group
-    sizes (same motivation as the reference loading its model once per
-    task, not once per record). n_buckets should be a few times the
-    core count but small enough that a bucket's conversations fit in
-    worker memory; default 16x shuffle partitions.
-
-    surface_names/topic_names: the COMPLETE dictionary universes of
-    candidate surfaces and topics (the KGModel's), whose sorted
-    positions are the candidates' surf_id/topic_id. Only ints cross the
-    Arrow boundary in both directions, and names are broadcast-joined
-    back JVM-side afterwards; ids are assigned in sorted order, so
-    integer tie-breaks are name-ordered.
-
-    max_rows_per_conv: per-conversation cost guard (the reference's
-    maxNumberOfWords=3000 analogue, AmbiguityForest.scala:105) —
-    conversations with more candidate rows are resolved in turn-aligned
-    coherence windows of at most this many rows (_conv_windows), keeping
-    the O(rows^2) support/elimination passes bounded per window.
-
-    distance_weighting: W2 — the reference's Normal-pdf mention-distance
-    link weighting (AmbiguityForest.scala:806-811). Default OFF for
-    parity: the reference computes the weight but multiplies it out
-    (`linkWeight //* distanceWeight`, :811).
-
-    dense_min_rows: window size where the dense sim-matrix path
-    replaces the scalar loop (None -> the module default / the
-    KG_DENSE_MIN_ROWS env knob). Pickled into the UDF closure, so it
-    reaches python workers regardless of their import-time env —
-    tests use it to pin dense == scalar through the real stage.
+    (16x shuffle partitions: a few times the core count, small enough
+    that a bucket's conversations fit in worker memory) and one pandas
+    group carries many conversations — this amortizes the per-group
+    Arrow/Python round-trip that dominates at small group sizes (same
+    motivation as the reference loading its model once per task, not
+    once per record). Conversations over _MAX_ROWS_PER_CONV candidate
+    rows resolve in coherence windows (_conv_windows).
     """
     from pyspark.sql import functions as F
 
     spark = candidates.sparkSession
-    if n_buckets is None:
-        n_buckets = 16 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_buckets = 16 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    interned = InternedContexts.of(context_vectors)
-    # sorted ids: id order == name order (tie-break contract)
-    surface_names = sorted(set(surface_names))
-    topic_names = sorted(set(topic_names))
+    interned = model.interned
+    topic_names = model.topic_names
     gid_lut = np.fromiter(
         (interned.tid.get(t, -1) for t in topic_names),
         np.int64,
@@ -786,15 +728,10 @@ def resolve(
     slim.ws = interned.ws
     slim._cache = {}
     ctx_bc = spark.sparkContext.broadcast((slim, gid_lut))
-    surface_dim, topic_dim = build_id_dims(spark, surface_names, topic_names)
 
-    # only turns that can yield a gap pattern need their text shipped.
-    # Eligibility comes from the (cheap, usually checkpointed) mention
-    # spans when provided — deriving it from `candidates` would evaluate
-    # the candidate DAG twice when linking carries the TF-IDF joins.
-    spans_src = mention_spans if mention_spans is not None else candidates
+    # only turns that can yield a gap pattern need their text shipped
     eligible_turns = (
-        spans_src.groupBy("conv_id", "turn_idx")
+        mention_spans.groupBy("conv_id", "turn_idx")
         .agg(F.countDistinct("start", "end").alias("nm"))
         .filter(F.col("nm") >= 2)
         .select("conv_id", "turn_idx")
@@ -856,7 +793,7 @@ def resolve(
             cid = conv_names[conv_code[lo]]
             texts = texts_by_conv.get(cid, {})
             for wlo, whi in _conv_windows(
-                lo, hi, turn_l, start_l, end_l, max_rows_per_conv
+                lo, hi, turn_l, start_l, end_l, _MAX_ROWS_PER_CONV
             ):
                 _resolve_conv(
                     cid, wlo, whi,
@@ -867,8 +804,6 @@ def resolve(
                     texts,
                     ctx,
                     rows,
-                    distance_weighting=distance_weighting,
-                    dense_min_rows=dense_min_rows,
                 )
         return _rows_to_pdf_coded(rows)
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import pickle
+import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -85,9 +86,19 @@ class KGModel:
         )
 
     def save(self, path: str) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "wb") as f:
-            pickle.dump(self, f, protocol=pickle.HIGHEST_PROTOCOL)
+        """Atomic: pickle to a temporary file beside `path`, then rename,
+        so an interrupted write never leaves a truncated cache that every
+        later build_or_load would fail on."""
+        d = os.path.dirname(path)
+        os.makedirs(d, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=d, prefix=".model-", suffix=".tmp")
+        try:
+            with os.fdopen(fd, "wb") as f:
+                pickle.dump(self, f, protocol=pickle.HIGHEST_PROTOCOL)
+            os.replace(tmp, path)
+        except BaseException:
+            os.unlink(tmp)
+            raise
 
     @classmethod
     def load(cls, path: str) -> "KGModel":

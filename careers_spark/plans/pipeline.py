@@ -216,19 +216,18 @@ class KGPipeline:
             run, name, compute, partition_by
         )
 
+    # Lineage is flushed even when a stage raises: the stages that did
+    # finish keep their _DONE markers, so a resume skips them and would
+    # never record their rows otherwise.
+
     def run_dictionary(
-        self,
-        raw_tables: dict[str, DataFrame],
-        run: PipelineRun | None = None,
-        second_order: bool = True,
-        context_filter: bool = True,
+        self, raw_tables: dict[str, DataFrame], run: PipelineRun | None = None
     ) -> PipelineRun:
         run = run or PipelineRun()
-        dictionary_phase(
-            self._stages(run), raw_tables,
-            second_order=second_order, context_filter=context_filter,
-        )
-        self._flush_lineage()
+        try:
+            dictionary_phase(self._stages(run), raw_tables)
+        finally:
+            self._flush_lineage()
         return run
 
     def run_corpus(
@@ -236,10 +235,8 @@ class KGPipeline:
         transcripts: DataFrame,
         dict_outputs: dict[str, DataFrame],
         run: PipelineRun | None = None,
-        repartition: int | None = None,
         model=None,
         tfidf: bool = True,
-        dense_min_rows: int | None = None,
     ) -> PipelineRun:
         run = run or PipelineRun()
         # the broadcastable model artifact (automaton + context map) —
@@ -250,25 +247,19 @@ class KGPipeline:
                 dict_outputs["dict_surface_forms"],
                 dict_outputs["dict_context_vectors"],
             )
-        if repartition:
-            transcripts = transcripts.repartition(repartition, "conv_id")
-        corpus_phase(
-            self._stages(run), transcripts, dict_outputs, model,
-            tfidf=tfidf, dense_min_rows=dense_min_rows,
-        )
-        self._flush_lineage()
+        try:
+            corpus_phase(
+                self._stages(run), transcripts, dict_outputs, model, tfidf=tfidf
+            )
+        finally:
+            self._flush_lineage()
         return run
 
     def run(
-        self,
-        transcripts: DataFrame,
-        raw_tables: dict[str, DataFrame],
-        repartition: int | None = None,
+        self, transcripts: DataFrame, raw_tables: dict[str, DataFrame]
     ) -> PipelineRun:
         run = self.run_dictionary(raw_tables)
-        return self.run_corpus(
-            transcripts, run.outputs, run=run, repartition=repartition
-        )
+        return self.run_corpus(transcripts, run.outputs, run=run)
 
 
 # -- the KG composition ------------------------------------------------------
@@ -286,16 +277,13 @@ def checkpoint_stage(
 
 
 def dictionary_phase(
-    stage,
-    raw_tables: dict[str, DataFrame],
-    second_order: bool = True,
-    context_filter: bool = True,
+    stage, raw_tables: dict[str, DataFrame]
 ) -> dict[str, DataFrame]:
     """raw synth/dump tables -> the five dictionary stages.
 
-    Defaults mirror the reference model build: allowedContext filters
-    the raw context table (Disambiguator.scala:43-102) and sparse topics
-    inherit second-order contexts at x0.1 (Disambiguator.scala:469-490;
+    As in the reference model build, allowedContext filters the raw
+    context table (Disambiguator.scala:43-102) and sparse topics inherit
+    second-order contexts at x0.1 (Disambiguator.scala:469-490;
     precomputed here, which is the reference's own TODO at
     AmbiguityForest.scala:46-48)."""
     redirects = stage(
@@ -308,16 +296,12 @@ def dictionary_phase(
         ),
     )
 
-    def _link_weights() -> DataFrame:
-        tc = raw_tables["topic_contexts"]
-        if context_filter:
-            tc = D.allowed_context(tc)
-        lw = D.link_weights(tc)
-        if second_order:
-            lw = D.expand_second_order_contexts(lw)
-        return lw
-
-    link_w = stage("dict_link_weights", _link_weights)
+    link_w = stage(
+        "dict_link_weights",
+        lambda: D.expand_second_order_contexts(
+            D.link_weights(D.allowed_context(raw_tables["topic_contexts"]))
+        ),
+    )
     context_vectors = stage(
         "dict_context_vectors",
         lambda: D.topic_context_vectors(D.top_contexts(link_w)),
@@ -341,15 +325,12 @@ def corpus_phase(
     dict_outputs: dict[str, DataFrame],
     model: KGModel,
     tfidf: bool = True,
-    dense_min_rows: int | None = None,
 ) -> dict[str, DataFrame]:
     """transcripts -> mentions -> [turn_terms -> word_doc_freq ->
     candidates] -> resolved -> canonical triples -> nodes/edges.
 
     tfidf: anchor-prior x TF-IDF context-cosine linking scores (the
-    north-star linking score; no term overlap -> identity on priors).
-    dense_min_rows: the resolver's dense sim-matrix threshold (None =
-    module default)."""
+    north-star linking score; no term overlap -> identity on priors)."""
     turns = stage(
         "transcripts",
         lambda: transcripts.sortWithinPartitions("conv_id", "turn_idx"),
@@ -357,7 +338,6 @@ def corpus_phase(
     resolved = link_and_resolve(
         stage, turns, dict_outputs["dict_surface_forms"], model,
         tfidf_vectors=dict_outputs["dict_context_vectors"] if tfidf else None,
-        dense_min_rows=dense_min_rows,
     )
     canon = dict_outputs["canonical_map"]
     triples = stage(
@@ -382,7 +362,6 @@ def link_and_resolve(
     surface_forms: DataFrame,
     model: KGModel,
     tfidf_vectors: DataFrame | None = None,
-    dense_min_rows: int | None = None,
 ) -> DataFrame:
     """transcripts -> mentions -> coded candidates -> resolved.
 
@@ -405,6 +384,8 @@ def link_and_resolve(
     mentions = stage(
         "mentions", lambda: M.detect_mentions(spark, transcripts, model.automaton)
     )
+    # one pair of id dims for the candidate attach, the TF-IDF context
+    # join and resolve's name join-back
     surface_dim, topic_dim = CO.build_id_dims(
         spark, model.surface_names, model.topic_names
     )
@@ -423,14 +404,7 @@ def link_and_resolve(
     return stage(
         "resolved",
         lambda: CO.resolve(
-            candidates, transcripts, model.interned,
-            surface_names=model.surface_names,
-            topic_names=model.topic_names,
-            mention_spans=mentions,
-            # dense sim-matrix threshold override (rides the UDF
-            # closure — workers re-import the module, so a module
-            # global would not reach them); None = module default
-            dense_min_rows=dense_min_rows,
+            candidates, transcripts, mentions, model, surface_dim, topic_dim
         ),
     )
 

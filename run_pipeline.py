@@ -45,15 +45,6 @@ def main():
         "scaling harness build it once at full parallelism)",
     )
     ap.add_argument(
-        "--dense-min-rows",
-        type=int,
-        default=None,
-        help="coherence-window size at which the resolver switches to "
-        "the dense sim-matrix path (default: module default, 192); a "
-        "huge value disables the dense path — the A/B knob for the "
-        "long-conversation scaling study",
-    )
-    ap.add_argument(
         "--no-warmup",
         action="store_true",
         help="skip the python-worker/JVM warmup job that runs before the "
@@ -116,8 +107,7 @@ def main():
     # phase 2: transcript processing (the scaling-relevant phase)
     t0 = time.monotonic()
     run = KGPipeline(spark, args.work_dir).run_corpus(
-        transcripts, drun.outputs, model=model, tfidf=not args.no_tfidf,
-        dense_min_rows=args.dense_min_rows,
+        transcripts, drun.outputs, model=model, tfidf=not args.no_tfidf
     )
     wall = time.monotonic() - t0
     n_triples = next(s.rows for s in run.stages if s.name == "triples")

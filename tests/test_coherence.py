@@ -126,14 +126,13 @@ def test_triple_extraction_gap_patterns(spark):
     assert "works_at" in preds
 
 
-def test_dense_path_through_spark_stage(spark):
-    """The >=192-row dense sim-matrix path through the FULL cogrouped
+def test_dense_path_through_spark_stage(spark, monkeypatch):
+    """The dense sim-matrix path through the FULL cogrouped
     applyInPandas stage (not just the pure-python helper): a synthetic
-    conversation with ~100 ambiguous mentions (2 candidates each, >=
-    the dense threshold) must resolve identically whether the dense
-    path is allowed (threshold 0) or suppressed (threshold huge)."""
-    import careers_spark.operators.coherence as comod
-
+    conversation with 100 ambiguous mentions (2 candidates each, 200
+    rows — past the default dense threshold) must resolve exactly as
+    the scalar reference loop does, run in-process with the threshold
+    patched out of reach."""
     n_m = 100
     surfaces = sorted(f"s{m}" for m in range(n_m))
     topics = ["Main:TA", "Main:TB"]
@@ -142,13 +141,13 @@ def test_dense_path_through_spark_stage(spark):
         t, s = divmod(m, 10)
         for topic_id, pr in ((0, 0.6), (1, 0.4)):
             rows.append(("c1", t, 3 * s, 3 * s, surfaces.index(f"s{m}"), topic_id, pr))
-    cands = spark.createDataFrame(
-        pd.DataFrame(
-            rows,
-            columns=["conv_id", "turn_idx", "start", "end",
-                     "surf_id", "topic_id", "prior"],
-        )
+    assert len(rows) >= CO._DENSE_MIN_ROWS  # the stage takes the dense path
+    cand_pdf = pd.DataFrame(
+        rows,
+        columns=["conv_id", "turn_idx", "start", "end",
+                 "surf_id", "topic_id", "prior"],
     )
+    cands = spark.createDataFrame(cand_pdf)
     transcripts = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -162,24 +161,34 @@ def test_dense_path_through_spark_stage(spark):
         ),
         schema=S.TRANSCRIPTS,
     )
-    ctx = {"Main:TA": {"cx": 1.0}, "Main:TB": {"cx": 0.4, "cy": 0.6}}
+    interned = CO.InternedContexts(
+        {"Main:TA": {"cx": 1.0}, "Main:TB": {"cx": 0.4, "cy": 0.6}}
+    )
+    model = KGModel(None, surfaces, topics, interned)
+    out = CO.resolve(
+        cands, transcripts, cands, model,
+        *CO.build_id_dims(spark, surfaces, topics),
+    )
+    dense = sorted(
+        (r.turn_idx, r.start, r.topic, round(r.score, 9))
+        for r in CO.links_of(out).collect()
+    )
 
-    def run(dense_min_rows):
-        # the threshold rides the UDF closure (resolve's dense_min_rows
-        # param), so it reaches the python WORKER processes — a module
-        # monkeypatch would not (workers re-import the module)
-        out = CO.resolve(
-            cands, transcripts, ctx,
-            surface_names=surfaces, topic_names=topics,
-            dense_min_rows=dense_min_rows,
-        )
-        return sorted(
-            (r.turn_idx, r.start, r.topic, round(r.score, 9))
-            for r in CO.links_of(out).collect()
-        )
+    # scalar reference: rows are already (turn, start, end, topic)-sorted
+    monkeypatch.setattr(CO, "_DENSE_MIN_ROWS", 10**9)
+    cols = [cand_pdf[c].tolist() for c in
+            ("turn_idx", "start", "end", "surf_id", "topic_id")]
+    gid = [interned.tid[topics[t]] for t in cols[4]]
+    ref_rows = []
+    CO._resolve_conv(
+        "c1", 0, len(rows), *cols, gid, cand_pdf["prior"].tolist(),
+        {}, interned, ref_rows,
+    )
+    scalar = sorted(
+        (r[1], r[3], topics[r[6]], round(r[7], 9))
+        for r in ref_rows if r[2] == "link"
+    )
 
-    dense = run(1)
-    scalar = run(10**9)
     assert len(dense) == n_m
     assert dense == scalar
     # every per-peer contribution ties exactly (0.6*0.4*0.4 ==

@@ -2,6 +2,8 @@
 corpus assert), resume, and the per-turn determinism invariant from
 BASELINE.json's input_hint."""
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -57,6 +59,61 @@ def test_lineage_written(spark, kb, work_dir):
     assert total == run.outputs["mentions"].count()
 
 
+def test_lineage_survives_failed_run(spark, kb, tmp_path, monkeypatch):
+    """A stage that raises must not lose the lineage rows of the stages
+    that finished before it: they keep their _DONE markers, so the
+    resume skips them and could never record those rows itself."""
+    from careers_spark.operators import coherence as CO
+
+    transcripts = spark.createDataFrame(
+        synth.gen_transcripts_pdf(kb, 5), schema=S.TRANSCRIPTS
+    )
+    raw = synth.kb_tables(spark, kb)
+    work = str(tmp_path / "w")
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("resolve failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(CO, "resolve", fail)
+        with pytest.raises(RuntimeError, match="resolve failed"):
+            KGPipeline(spark, work).run(transcripts, raw)
+    run = KGPipeline(spark, work).run(transcripts, raw)
+    assert run.outputs["triples"].count() > 0
+    lin = spark.read.parquet(f"{work}/_lineage").select("stage").distinct()
+    assert {r.stage for r in lin.collect()} == {s.name for s in run.stages}
+
+
+def test_model_cache_write_is_atomic(tmp_path, monkeypatch):
+    """A pickle dump that fails partway leaves no cache file behind
+    (a truncated model.pkl would fail every later build_or_load), and a
+    failed rewrite keeps the previous cache intact."""
+    import pickle
+
+    from careers_spark.operators import model as MD
+
+    path = tmp_path / "dict" / "model.pkl"
+    good = MD.KGModel(None, ["a"], ["T:a"], None)
+
+    def partial_dump(obj, f, protocol=None):
+        f.write(b"\x80\x05partial")
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(MD.pickle, "dump", partial_dump)
+        with pytest.raises(OSError, match="disk full"):
+            good.save(str(path))
+    assert os.listdir(path.parent) == []
+
+    good.save(str(path))
+    with monkeypatch.context() as m:
+        m.setattr(MD.pickle, "dump", partial_dump)
+        with pytest.raises(OSError, match="disk full"):
+            MD.KGModel(None, ["b"], ["T:b"], None).save(str(path))
+    assert os.listdir(path.parent) == ["model.pkl"]
+    assert MD.KGModel.load(str(path)) == good
+
+
 def test_per_turn_determinism_across_parallelism(spark, kb):
     """Per-row invariant from input_hint: per-turn text equality under
     stable (conv_id, turn_idx) ordering, at two parallelism levels."""
@@ -74,8 +131,12 @@ def test_pipeline_output_determinism(spark, kb, tmp_path):
         synth.gen_transcripts_pdf(kb, 15), schema=S.TRANSCRIPTS
     )
     raw = synth.kb_tables(spark, kb)
-    r1 = KGPipeline(spark, str(tmp_path / "w1")).run(transcripts, raw, repartition=2)
-    r2 = KGPipeline(spark, str(tmp_path / "w2")).run(transcripts, raw, repartition=17)
+    r1 = KGPipeline(spark, str(tmp_path / "w1")).run(
+        transcripts.repartition(2, "conv_id"), raw
+    )
+    r2 = KGPipeline(spark, str(tmp_path / "w2")).run(
+        transcripts.repartition(17, "conv_id"), raw
+    )
     t1 = r1.outputs["triples"].select("conv_id", "turn_idx", "subj", "pred", "obj")
     t2 = r2.outputs["triples"].select("conv_id", "turn_idx", "subj", "pred", "obj")
     assert t1.exceptAll(t2).count() == 0

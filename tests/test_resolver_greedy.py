@@ -175,3 +175,23 @@ def test_last_candidate_guard():
         (0, 4, 4, [("T:anchor", 1.0)]),
     ]
     assert _run_case(ctx_map, mentions) == {"T:lonely", "T:strong", "T:anchor"}
+
+
+def test_far_support_is_not_distance_weighted():
+    """The reference computes a mention-distance weight (W2,
+    AmbiguityForest.scala:806-811) but multiplies it out (`linkWeight
+    //* distanceWeight`, :811), so a far peer's support counts in full:
+    X@0 resolves to A, backed by the far P2@40 (sim 1.0), not to B,
+    backed by the near P1@2 (sim 0.5)."""
+    ctx_map = {
+        "A": {"cx": 1.0},
+        "P2": {"cx": 1.0},
+        "B": {"cy": 1.0},
+        "P1": {"cy": 0.5},
+    }
+    mentions = [
+        (0, 0, 0, [("A", 0.5), ("B", 0.5)]),
+        (0, 2, 2, [("P1", 1.0)]),
+        (0, 40, 40, [("P2", 1.0)]),
+    ]
+    assert _run_case(ctx_map, mentions) == {"A", "P1", "P2"}

@@ -3,7 +3,7 @@
 The reference bounds document size with maxNumberOfWords=3000
 (AmbiguityForest.scala:105) by dropping the tail; the Spark resolver
 instead splits oversized conversations into turn-aligned coherence
-windows of at most `max_rows_per_conv` candidate rows, so the O(rows^2)
+windows of at most `_MAX_ROWS_PER_CONV` candidate rows, so the O(rows^2)
 support/elimination passes cost O(rows * cap) total and EVERY mention
 still resolves. These tests pin the chunker's invariants and the
 bounded wall time on a pathological synthetic conversation.

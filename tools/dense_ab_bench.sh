@@ -56,9 +56,10 @@ for E in $LEVELS; do
         --conf spark.sql.shuffle.partitions=$((4 * E)) \
         --conf spark.driver.memory=4g \
         --conf spark.local.dir="$BASE/spark-local" \
+        --conf spark.executorEnv.KG_DENSE_MIN_ROWS="$CFG" \
         --py-files "$ZIP" \
         run_pipeline.py --input "$INPUT" --work-dir "$BASE/run" \
-        --dict-cache "$DICT" --skip-pr --dense-min-rows "$CFG" \
+        --dict-cache "$DICT" --skip-pr \
         --json-out "/tmp/kg_${TAG}_${E}_${CFG}_r${R}.json" 2>/dev/null | tail -1
     done
     # order-insensitive content hash of the triples output — must be

@@ -25,11 +25,15 @@ for cpus in (8, 32):
     turns = spark.read.parquet("/tmp/kg_scale_run_8/transcripts").select(
         "conv_id", "turn_idx", "text"
     )
+    mentions = spark.read.parquet("/tmp/kg_scale_run_8/mentions")
     ctx = spark.read.parquet("/tmp/kg_scale_dict/dict_context_vectors")
     # the candidates table is dictionary-coded: resolve needs the
-    # model's name universes to join names back
+    # model's name universes (as id dims) to join names back
     model = KGModel.build(
         spark.read.parquet("/tmp/kg_scale_dict/dict_surface_forms"), ctx
+    )
+    surface_dim, topic_dim = CO.build_id_dims(
+        spark, model.surface_names, model.topic_names
     )
 
     # monkeypatch fn wrapper to time python work per conversation
@@ -50,8 +54,7 @@ for cpus in (8, 32):
     comod._resolve_conv = timed
     t0 = time.monotonic()
     n = CO.resolve(
-        cand, turns, model.interned,
-        surface_names=model.surface_names, topic_names=model.topic_names,
+        cand, turns, mentions, model, surface_dim, topic_dim
     ).count()
     wall = time.monotonic() - t0
     comod._resolve_conv = orig_resolve
