@@ -661,6 +661,20 @@ def _rows_to_pdf_coded(rows: list[tuple]) -> pd.DataFrame:
     return pdf
 
 
+# Mention rows per resolve group. Every cogroup group is a fixed Arrow
+# and pandas round-trip (about 7 ms on a 4-vCPU host); below this many
+# rows that fixed cost outweighs the resolver's own work on the group.
+_ROWS_PER_BUCKET = 4096
+
+
+def _n_buckets(rows: int, partitions: int) -> int:
+    """Resolve groups for `rows` mention rows: one per _ROWS_PER_BUCKET
+    rows, at least one per shuffle partition and at most 16 per
+    shuffle partition (a few times the core count, small enough that a
+    bucket's conversations fit in worker memory)."""
+    return min(max(-(-rows // _ROWS_PER_BUCKET), partitions), 16 * partitions)
+
+
 def resolve(
     candidates: DataFrame,
     transcripts: DataFrame,
@@ -695,18 +709,24 @@ def resolve(
     start, end, surface, topic, score, pred, obj).
 
     Conversations are independent, so they are grouped into hash buckets
-    (16x shuffle partitions: a few times the core count, small enough
-    that a bucket's conversations fit in worker memory) and one pandas
-    group carries many conversations — this amortizes the per-group
-    Arrow/Python round-trip that dominates at small group sizes (same
-    motivation as the reference loading its model once per task, not
-    once per record). Conversations over _MAX_ROWS_PER_CONV candidate
-    rows resolve in coherence windows (_conv_windows).
+    and one pandas group carries many conversations — this amortizes
+    the per-group Arrow/Python round-trip that dominates at small group
+    sizes (same motivation as the reference loading its model once per
+    task, not once per record). The bucket count follows the row count
+    of the materialized mention_spans (_n_buckets): a small corpus gets
+    one bucket per shuffle partition, since AQE coalesces its shuffle
+    into a task or two that run every group's round-trip serially; a
+    large one gets 16 per partition. Results do not depend on the
+    count. Conversations over _MAX_ROWS_PER_CONV
+    candidate rows resolve in coherence windows (_conv_windows).
     """
     from pyspark.sql import functions as F
 
     spark = candidates.sparkSession
-    n_buckets = 16 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_buckets = _n_buckets(
+        mention_spans.count(),
+        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+    )
 
     interned = model.interned
     topic_names = model.topic_names

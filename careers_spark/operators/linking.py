@@ -50,10 +50,44 @@ def attach_candidates_coded(
     )
 
 
+def topic_terms(context_vectors: DataFrame) -> DataFrame:
+    """The topic side of the TF-IDF context cosine, tokenized once per
+    dictionary: (topic, term, weight1), one row per distinct term of
+    each of a topic's top-K context NAMES, carrying that context's
+    weight1 (a term shared by two contexts of a topic gives two rows;
+    tfidf_context_scores sums them).
+
+    context_vectors: the packed (topic, ctx_ids, ctx_ws) dictionary
+    stage. The explicit repartition matters: the packed vectors usually
+    read back from a small checkpoint parquet (one input split), and
+    without it the explode fan-out and the Python tokenizer over
+    millions of context names would run in ONE task, a serial chunk no
+    executor count can shrink. One task per core keeps it to one wave."""
+    from careers_spark.functions.text import tokenize_udf
+
+    sc = context_vectors.sparkSession.sparkContext
+    return (
+        context_vectors.select(
+            "topic", F.explode(F.arrays_zip("ctx_ids", "ctx_ws")).alias("z")
+        )
+        .select(
+            "topic",
+            F.col("z.ctx_ids").alias("context"),
+            F.col("z.ctx_ws").alias("weight1"),
+        )
+        .repartition(sc.defaultParallelism)
+        .select(
+            "topic",
+            F.explode(F.array_distinct(tokenize_udf(F.col("context")))).alias("term"),
+            "weight1",
+        )
+    )
+
+
 def tfidf_context_scores(
     candidates: DataFrame,
     turn_terms: DataFrame,
-    top_ctx: DataFrame,
+    topic_terms: DataFrame,
     word_doc_freq: DataFrame,
     n_docs: int,
 ) -> DataFrame:
@@ -64,8 +98,9 @@ def tfidf_context_scores(
     frequencies from WordInTopicCount feed the idf). Re-expressed as
     joins:
 
-      topic term vectors : context NAMES tokenized, term weight =
-                           ctx_weight * idf(term)        (broadcast dim)
+      topic term vectors : context NAMES tokenized (topic_terms, once
+                           per dictionary), term weight =
+                           sum of ctx_weight * idf(term)  (broadcast dim)
       turn term vectors  : turn tokens restricted to terms that occur in
                            ANY topic vector (broadcast semi-join BEFORE
                            the explode shuffle — the term dimension is
@@ -82,36 +117,31 @@ def tfidf_context_scores(
     the corpus is tokenized ONCE and the pass is shared with
     word_doc_freq.
 
-    candidates and top_ctx are keyed by the dictionary-coded `topic_id`
-    (ints keep strings off every shuffle of this stage). candidates must
-    be unique on their full column set (true of attach_candidates_coded
-    output: distinct mention spans x a (surface, topic)-unique
-    dictionary) — scoring groups by those columns.
+    topic_terms: the pre-tokenized (topic_id, term, weight1) rows of
+    `topic_terms` above, coded to topic ids. Both inputs arrive
+    tokenized, so this scoring runs no Python.
+
+    candidates and topic_terms are keyed by the dictionary-coded
+    `topic_id` (ints keep strings off every shuffle of this stage).
+    candidates must be unique on their full column set (true of
+    attach_candidates_coded output: distinct mention spans x a
+    (surface, topic)-unique dictionary) — scoring groups by those
+    columns.
 
     Shuffle-volume note: the dot-product join only ever matches terms
     that occur in the corpus, so topic term vectors are pre-shrunk to
     the corpus vocabulary (a semi-join) BEFORE the candidate explode;
     norms are computed on the FULL vectors first, so results are exact.
     """
-    from careers_spark.functions.text import tokenize_udf
-
     idf = word_doc_freq.select(
         "word", F.log(F.lit(float(n_docs + 1)) / (F.col("doc_freq") + 1)).alias("idf")
     )
 
     # topic term vectors are consumed four times below (vocabulary
-    # broadcast, norms, active shrink, dot join) — materialize once so
-    # the top-K window over the full link-weights table doesn't recompute
-    # per consumer (dim-sized: topics x tokenized top-30 context names).
-    # The explicit repartition matters: top_ctx often reads back from a
-    # small checkpoint parquet (one input split), and without it the
-    # explode fan-out + python tokenizer of millions of context names
-    # runs in ONE task — a serial chunk no executor count can shrink.
-    sc = top_ctx.sparkSession.sparkContext
-    topic_terms = (
-        top_ctx.select("topic_id", "context", "weight1")
-        .repartition(2 * sc.defaultParallelism)
-        .withColumn("term", F.explode(F.array_distinct(tokenize_udf(F.col("context")))))
+    # broadcast, norms, active shrink, dot join) — materialize once
+    # (dim-sized: topics x tokenized top-K context names)
+    topic_vec = (
+        topic_terms.select("topic_id", "term", "weight1")
         .join(idf.withColumnRenamed("word", "term"), "term", "left")
         .na.fill({"idf": 1.0})
         .groupBy("topic_id", "term")
@@ -119,13 +149,13 @@ def tfidf_context_scores(
         .localCheckpoint(eager=True)
     )
     # norms over the FULL vectors (before any vocabulary shrink)
-    topic_norm = topic_terms.groupBy("topic_id").agg(
+    topic_norm = topic_vec.groupBy("topic_id").agg(
         F.sqrt(F.sum(F.col("tw") * F.col("tw"))).alias("tnorm")
     )
 
     turn_terms = (
         turn_terms
-        .join(F.broadcast(topic_terms.select("term").distinct()), "term", "left_semi")
+        .join(F.broadcast(topic_vec.select("term").distinct()), "term", "left_semi")
         .join(F.broadcast(idf.withColumnRenamed("word", "term")), "term", "left")
         .na.fill({"idf": 1.0})
     )
@@ -140,7 +170,7 @@ def tfidf_context_scores(
     # candidate rows are unioned in (contrib 0, tnorm null), which
     # replaces the r2 shape's 6-key sort-merge re-join of `dots` back
     # onto candidates with a map-side-combining groupBy.
-    active_terms = topic_terms.join(
+    active_terms = topic_vec.join(
         F.broadcast(turn_terms.select("term").distinct()), "term", "left_semi"
     ).join(topic_norm, "topic_id")
 

@@ -27,6 +27,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -72,11 +73,23 @@ class KGPipeline:
         os.makedirs(work_dir, exist_ok=True)
 
     def _flush_lineage(self) -> None:
+        # built from pandas, so the rows cross to the JVM as one Arrow
+        # batch: a Python list goes through a pickled RDD and costs a
+        # job of its own (0.6-1.1 s for a few dozen rows on a warm
+        # 4-vCPU local session, against 0.14-0.18 s through Arrow)
         if not self._lineage:
             return
+        files, rows_out, checksums, stages = zip(*self._lineage)
+        pdf = pd.DataFrame(
+            {
+                "file": list(files),
+                "rows_out": pd.array(rows_out, dtype="Int64"),
+                "checksum": pd.array(checksums, dtype="Int64"),
+                "stage": list(stages),
+            }
+        )
         self.spark.createDataFrame(
-            self._lineage,
-            schema="file string, rows_out long, checksum long, stage string",
+            pdf, schema="file string, rows_out long, checksum long, stage string"
         ).coalesce(1).write.mode("append").parquet(
             os.path.join(self.work_dir, "_lineage")
         )
@@ -279,13 +292,15 @@ def checkpoint_stage(
 def dictionary_phase(
     stage, raw_tables: dict[str, DataFrame]
 ) -> dict[str, DataFrame]:
-    """raw synth/dump tables -> the five dictionary stages.
+    """raw synth/dump tables -> the six dictionary stages.
 
     As in the reference model build, allowedContext filters the raw
     context table (Disambiguator.scala:43-102) and sparse topics inherit
     second-order contexts at x0.1 (Disambiguator.scala:469-490;
     precomputed here, which is the reference's own TODO at
-    AmbiguityForest.scala:46-48)."""
+    AmbiguityForest.scala:46-48). dict_topic_terms holds the context
+    names tokenized for TF-IDF linking, once per dictionary rather than
+    once per corpus run."""
     redirects = stage(
         "dict_redirects", lambda: D.resolve_redirects(raw_tables["redirects"])
     )
@@ -306,6 +321,9 @@ def dictionary_phase(
         "dict_context_vectors",
         lambda: D.topic_context_vectors(D.top_contexts(link_w)),
     )
+    topic_terms = stage(
+        "dict_topic_terms", lambda: L.topic_terms(context_vectors)
+    )
     canon = stage(
         "canonical_map",
         lambda: CZ.canonical_mapping(redirects, raw_tables["same_as"]),
@@ -315,6 +333,7 @@ def dictionary_phase(
         "dict_surface_forms": surface_forms,
         "dict_link_weights": link_w,
         "dict_context_vectors": context_vectors,
+        "dict_topic_terms": topic_terms,
         "canonical_map": canon,
     }
 
@@ -337,7 +356,7 @@ def corpus_phase(
     )
     resolved = link_and_resolve(
         stage, turns, dict_outputs["dict_surface_forms"], model,
-        tfidf_vectors=dict_outputs["dict_context_vectors"] if tfidf else None,
+        topic_terms=dict_outputs["dict_topic_terms"] if tfidf else None,
     )
     canon = dict_outputs["canonical_map"]
     triples = stage(
@@ -361,7 +380,7 @@ def link_and_resolve(
     transcripts: DataFrame,
     surface_forms: DataFrame,
     model: KGModel,
-    tfidf_vectors: DataFrame | None = None,
+    topic_terms: DataFrame | None = None,
 ) -> DataFrame:
     """transcripts -> mentions -> coded candidates -> resolved.
 
@@ -372,13 +391,14 @@ def link_and_resolve(
     bandwidth is the scaling limiter on shared-socket hosts, and string
     keys are its biggest tax). Names join back inside `resolved`.
 
-    tfidf_vectors: the dictionary's packed context vectors; given, the
-    candidates are re-scored by anchor prior x TF-IDF context cosine
-    (stages turn_terms, word_doc_freq, candidates). The streaming sink
-    passes None, on purpose: idf is a corpus-wide statistic, so a
-    per-poll idf would make a conversation's links depend on which poll
-    delivered it. Linked on anchor priors, a conversation resolves from
-    its own turns and the dictionary alone, whichever poll carries it.
+    topic_terms: the dictionary's tokenized context names
+    (dict_topic_terms); given, the candidates are re-scored by anchor
+    prior x TF-IDF context cosine (stages turn_terms, word_doc_freq,
+    candidates). The streaming sink passes None, on purpose: idf is a
+    corpus-wide statistic, so a per-poll idf would make a
+    conversation's links depend on which poll delivered it. Linked on
+    anchor priors, a conversation resolves from its own turns and the
+    dictionary alone, whichever poll carries it.
     """
     spark = transcripts.sparkSession
     mentions = stage(
@@ -397,9 +417,9 @@ def link_and_resolve(
     candidates = L.attach_candidates_coded(
         mentions, surface_forms, surface_dim, topic_dim
     )
-    if tfidf_vectors is not None:
+    if topic_terms is not None:
         candidates = _tfidf_candidates(
-            stage, transcripts, candidates, tfidf_vectors, topic_dim
+            stage, transcripts, candidates, topic_terms, topic_dim
         )
     return stage(
         "resolved",
@@ -413,12 +433,14 @@ def _tfidf_candidates(
     stage,
     transcripts: DataFrame,
     candidates: DataFrame,
-    context_vectors: DataFrame,
+    topic_terms: DataFrame,
     topic_dim: DataFrame,
 ) -> DataFrame:
     """Candidates re-scored by anchor prior x TF-IDF context cosine. The
     corpus is tokenized ONCE (turn_terms stage) and the pass is shared
-    by word_doc_freq + the cosine joins."""
+    by word_doc_freq + the cosine joins; the context names come
+    tokenized from the dictionary (dict_topic_terms), so no other
+    Python UDF runs here."""
     from careers_spark.functions.text import tokenize_udf
 
     # cosine dot products only ever touch terms that occur in topic
@@ -427,14 +449,7 @@ def _tfidf_candidates(
     # turn_terms table is ~vocab-hit tokens, not the full corpus token
     # stream (30x+ at bench scale). Per-term doc frequencies (hence idf)
     # are unchanged by dropping other terms, so scoring is exact.
-    vocab = (
-        context_vectors.select(F.explode("ctx_ids").alias("context"))
-        .distinct()
-        .select(
-            F.explode(F.array_distinct(tokenize_udf(F.col("context")))).alias("term")
-        )
-        .distinct()
-    )
+    vocab = topic_terms.select("term").distinct()
     turn_terms = stage(
         "turn_terms",
         lambda: transcripts.select(
@@ -450,25 +465,11 @@ def _tfidf_candidates(
         ),
     )
     n_turns = transcripts.count()
-    # top-K contexts come from the MATERIALIZED packed vectors (dict
-    # phase) — re-running top_contexts() here would repeat the window
-    # sort over the full link-weights table inside the corpus phase
-    top_ctx = (
-        context_vectors.select(
-            "topic", F.explode(F.arrays_zip("ctx_ids", "ctx_ws")).alias("z")
-        )
-        .select(
-            "topic",
-            F.col("z.ctx_ids").alias("context"),
-            F.col("z.ctx_ws").alias("weight1"),
-        )
-        .join(F.broadcast(topic_dim), "topic")
-        .drop("topic")
-    )
+    coded_terms = topic_terms.join(F.broadcast(topic_dim), "topic").drop("topic")
     return stage(
         "candidates",
         lambda: L.tfidf_context_scores(
-            candidates, turn_terms, top_ctx, wdf, n_docs=n_turns
+            candidates, turn_terms, coded_terms, wdf, n_docs=n_turns
         )
         .withColumn("prior", F.col("score"))
         .drop("score", "ctx_cos"),

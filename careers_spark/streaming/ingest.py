@@ -126,7 +126,11 @@ def make_incremental_sink(
     digests_dir = os.path.join(out_dir, "digests")
     matches_dir = os.path.join(out_dir, "matches")
 
+    # Every frame read twice below (an emptiness test, then a write or a
+    # second consumer) is materialized once first, so its plan runs once:
+    # the micro-batch's stateful dedup, the digests and the matcher.
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        batch_df = batch_df.localCheckpoint(eager=True)
         if batch_df.isEmpty():
             return
         ep = int(epoch_id)
@@ -141,10 +145,9 @@ def make_incremental_sink(
                 .dropDuplicates(),
                 "conv_id",
                 "left_anti",
-            )
-        fresh = fresh.localCheckpoint(eager=True)
-        if fresh.isEmpty():
-            return
+            ).localCheckpoint(eager=True)
+            if fresh.isEmpty():
+                return
 
         # -- processCVs ---------------------------------------------------
         out = link_and_resolve(checkpoint_stage, fresh, surface_forms, model)
@@ -172,7 +175,7 @@ def make_incremental_sink(
         prev_max = 0
         if old_dg is not None:
             prev_max = old_dg.agg(F.max("vec_id")).collect()[0][0] or 0
-        dg = document_digests(links_of(out))
+        dg = document_digests(links_of(out)).localCheckpoint(eager=True)
         # r6 (VERDICT r5 #6, guide §2.5): vec_ids are the dense ranks
         # of this epoch's distinct conv_ids — the old unpartitioned
         # dense_rank window single-partition-sorted a backfill-sized
@@ -231,7 +234,7 @@ def make_incremental_sink(
             prev_max,
             prev_max,
             min_similarity=min_similarity,
-        ).filter(F.col("id_a") < F.col("id_b"))
+        ).filter(F.col("id_a") < F.col("id_b")).localCheckpoint(eager=True)
         if not matches.isEmpty():
             matches.write.mode("overwrite").parquet(f"{matches_dir}/epoch={ep}")
         if not new_dg.isEmpty():

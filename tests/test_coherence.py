@@ -197,3 +197,46 @@ def test_dense_path_through_spark_stage(spark, monkeypatch):
     # paths must walk identically; the mixed winner set shows the
     # cascade genuinely propagated rather than one topic sweeping
     assert {t for (_, _, t, _) in dense} == {"Main:TA", "Main:TB"}
+
+
+def test_bucket_count_follows_rows(monkeypatch):
+    """One resolve group per _ROWS_PER_BUCKET mention rows, clamped to
+    [P, 16P] for P shuffle partitions."""
+    monkeypatch.setattr(CO, "_ROWS_PER_BUCKET", 100)
+    p = 8
+    assert CO._n_buckets(0, p) == p
+    assert CO._n_buckets(100 * p, p) == p
+    assert CO._n_buckets(100 * p + 1, p) == p + 1
+    assert CO._n_buckets(100 * 20, p) == 20
+    assert CO._n_buckets(100 * 20 - 1, p) == 20
+    assert CO._n_buckets(100 * 16 * p, p) == 16 * p
+    assert CO._n_buckets(100 * 16 * p + 1, p) == 16 * p
+    assert CO._n_buckets(10**9, p) == 16 * p
+
+
+def test_resolve_rows_independent_of_bucket_count(spark, monkeypatch):
+    """Conversations resolve independently of how they are grouped:
+    identical rows, scores included, at P and at 16P buckets."""
+    kb = synth.build_kb(n_domains=4)
+    transcripts = spark.createDataFrame(
+        synth.gen_transcripts_pdf(kb, 40), schema=S.TRANSCRIPTS
+    )
+    raw = synth.kb_tables(spark, kb)
+    sf = D.surface_priors(
+        D.build_surface_forms(raw["surface_forms_raw"], D.resolve_redirects(raw["redirects"]))
+    ).localCheckpoint(eager=True)
+    ctx_vecs = D.topic_context_vectors(
+        D.top_contexts(D.link_weights(raw["topic_contexts"]))
+    )
+    model = KGModel.build(sf, ctx_vecs)
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def run(n):
+        used = []
+        monkeypatch.setattr(CO, "_n_buckets", lambda rows, parts: used.append(n) or n)
+        out = link_and_resolve(checkpoint_stage, transcripts, sf, model)
+        assert used == [n]
+        return sorted((tuple(r) for r in out.collect()), key=repr)
+
+    few, many = run(p), run(16 * p)
+    assert few and few == many

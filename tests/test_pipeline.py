@@ -50,12 +50,27 @@ def test_resume_skips_stages(spark, kb, work_dir):
 
 
 def test_lineage_written(spark, kb, work_dir):
+    """Lineage rows keep their schema, checksum stays null without
+    checksums=True, and a flush appends to a _lineage directory an
+    earlier run left (here one written from a plain row list)."""
     transcripts = spark.createDataFrame(
         synth.gen_transcripts_pdf(kb, 5), schema=S.TRANSCRIPTS
     )
+    spark.createDataFrame(
+        [("old-part.parquet", 7, None, "old_stage")],
+        schema="file string, rows_out long, checksum long, stage string",
+    ).write.parquet(f"{work_dir}/_lineage")
     run = KGPipeline(spark, work_dir).run(transcripts, synth.kb_tables(spark, kb))
-    lin = spark.read.parquet(f"{work_dir}/_lineage").filter("stage = 'mentions'")
-    total = sum(r.rows_out for r in lin.collect())
+    lin = spark.read.parquet(f"{work_dir}/_lineage")
+    assert lin.schema.simpleString() == (
+        "struct<file:string,rows_out:bigint,checksum:bigint,stage:string>"
+    )
+    rows = lin.collect()
+    assert [tuple(r) for r in rows if r.stage == "old_stage"] == [
+        ("old-part.parquet", 7, None, "old_stage")
+    ]
+    assert all(r.checksum is None for r in rows)
+    total = sum(r.rows_out for r in rows if r.stage == "mentions")
     assert total == run.outputs["mentions"].count()
 
 
@@ -125,8 +140,10 @@ def test_per_turn_determinism_across_parallelism(spark, kb):
 
 
 def test_pipeline_output_determinism(spark, kb, tmp_path):
-    """Same corpus, two different shuffle-partition settings -> identical
-    triple sets (ordering discipline holds under re-partitioning)."""
+    """Same corpus, two different input partitionings -> identical
+    triple sets and resolved rows (ordering discipline holds under
+    re-partitioning). Resolved scores may differ in the last bits: the
+    TF-IDF sums run in shuffle order."""
     transcripts = spark.createDataFrame(
         synth.gen_transcripts_pdf(kb, 15), schema=S.TRANSCRIPTS
     )
@@ -141,6 +158,17 @@ def test_pipeline_output_determinism(spark, kb, tmp_path):
     t2 = r2.outputs["triples"].select("conv_id", "turn_idx", "subj", "pred", "obj")
     assert t1.exceptAll(t2).count() == 0
     assert t2.exceptAll(t1).count() == 0
+
+    def resolved(run):
+        rows = [r.asDict() for r in run.outputs["resolved"].collect()]
+        return sorted(rows, key=lambda r: repr([v for k, v in r.items() if k != "score"]))
+
+    res1, res2 = resolved(r1), resolved(r2)
+    assert res1 and len(res1) == len(res2)
+    for a, b in zip(res1, res2):
+        sa, sb = a.pop("score"), b.pop("score")
+        assert a == b
+        assert sa == pytest.approx(sb, rel=1e-12, abs=0)
 
 
 def test_tfidf_pipeline_preserves_pr(spark, kb, tmp_path):

@@ -2,43 +2,47 @@
 north star; cosine semantics per TopicVector.scala:47-84)."""
 
 import pandas as pd
-from pyspark.sql import functions as F
 
-from careers_spark import schema as S
-from careers_spark.functions.text import tokenize_udf
+from careers_spark import synth
+from careers_spark.functions.text import tokenize_py
 from careers_spark.operators import linking as L
+from careers_spark.plans.pipeline import checkpoint_stage, dictionary_phase
 
-# candidates and topic contexts are dictionary-coded: topic_id is the
+# candidates and topic terms are dictionary-coded: topic_id is the
 # position in the sorted topic names
 TOPICS = ["Main:Condoleezza Rice", "Main:Rice"]
 RICE, CONDI = TOPICS.index("Main:Rice"), TOPICS.index("Main:Condoleezza Rice")
 
+TEXTS = {
+    "c1": "rice served with beans for dinner",  # food words
+    "c2": "rice worked with president george w bush",  # politics words
+}
+CONTEXTS = [
+    (RICE, "Category:Beans and dinner food", 0.9),
+    (CONDI, "Main:George W. Bush", 0.9),
+    (CONDI, "Category:President", 0.5),
+]
 
-def _turn_terms(transcripts):
-    return transcripts.select(
-        "conv_id",
-        "turn_idx",
-        F.explode(F.array_distinct(tokenize_udf(F.col("text")))).alias("term"),
-    )
+
+def _explode_terms(rows):
+    """(key, text, weight) -> (key, term, weight) over the distinct
+    tokens of text: the tokenizer pass dict_topic_terms runs."""
+    return [
+        (key, term, weight)
+        for key, text, weight in rows
+        for term in dict.fromkeys(tokenize_py(text))
+    ]
+
+
+def _turn_terms(spark, texts):
+    rows = [
+        (c, 0, term) for c, text in sorted(texts.items())
+        for term in dict.fromkeys(tokenize_py(text))
+    ]
+    return spark.createDataFrame(rows, schema="conv_id string, turn_idx int, term string")
 
 
 def _fixture(spark):
-    transcripts = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "conv_id": ["c1", "c2"],
-                "turn_idx": pd.array([0, 0], dtype="int32"),
-                "role": ["user", "user"],
-                "text": [
-                    "rice served with beans for dinner",  # food words
-                    "rice worked with president george w bush",  # politics words
-                ],
-                "tool": ["", ""],
-                "ts": pd.to_datetime([1700000000, 1700000060], unit="s"),
-            }
-        ),
-        schema=S.TRANSCRIPTS,
-    )
     cands = spark.createDataFrame(
         pd.DataFrame(
             [
@@ -50,28 +54,19 @@ def _fixture(spark):
             columns=["conv_id", "turn_idx", "start", "end", "surf_id", "topic_id", "prior"],
         )
     )
-    top_ctx = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                (RICE, "Category:Beans and dinner food", 0.9, 0.9),
-                (CONDI, "Main:George W. Bush", 0.9, 0.9),
-                (CONDI, "Category:President", 0.5, 0.5),
-            ],
-            columns=["topic_id", "context", "weight1", "weight2"],
-        )
+    topic_terms = spark.createDataFrame(
+        pd.DataFrame(_explode_terms(CONTEXTS), columns=["topic_id", "term", "weight1"])
     )
     wdf = spark.createDataFrame(
         pd.DataFrame({"word": ["beans", "dinner", "george", "bush", "president"],
                       "doc_freq": [5, 5, 5, 5, 5]})
     )
-    return transcripts, cands, top_ctx, wdf
+    return _turn_terms(spark, TEXTS), cands, topic_terms, wdf
 
 
 def test_ctx_cos_separates_senses(spark):
-    transcripts, cands, top_ctx, wdf = _fixture(spark)
-    out = L.tfidf_context_scores(
-        cands, _turn_terms(transcripts), top_ctx, wdf, n_docs=100
-    )
+    turn_terms, cands, topic_terms, wdf = _fixture(spark)
+    out = L.tfidf_context_scores(cands, turn_terms, topic_terms, wdf, n_docs=100)
     got = {(r.conv_id, TOPICS[r.topic_id]): (r.ctx_cos, r.score) for r in out.collect()}
     # food turn: the grain overlaps (beans, dinner); Condi does not
     assert got[("c1", "Main:Rice")][0] > 0
@@ -90,18 +85,50 @@ def test_no_overlap_is_prior_identity(spark):
     """With zero term overlap the score must equal the prior exactly —
     the guarantee that lets corpora without context-name words enable
     this stage as a no-op."""
-    transcripts, cands, top_ctx, wdf = _fixture(spark)
-    t2 = transcripts.withColumn("text", transcripts.text.substr(0, 0))  # empty
-    out = L.tfidf_context_scores(cands, _turn_terms(t2), top_ctx, wdf, n_docs=100)
+    _, cands, topic_terms, wdf = _fixture(spark)
+    empty = _turn_terms(spark, {c: "" for c in TEXTS})
+    out = L.tfidf_context_scores(cands, empty, topic_terms, wdf, n_docs=100)
     for r in out.collect():
         assert r.ctx_cos == 0.0
         assert r.score == r.prior
 
 
 def test_cos_bounds(spark):
-    transcripts, cands, top_ctx, wdf = _fixture(spark)
-    out = L.tfidf_context_scores(
-        cands, _turn_terms(transcripts), top_ctx, wdf, n_docs=100
-    )
+    turn_terms, cands, topic_terms, wdf = _fixture(spark)
+    out = L.tfidf_context_scores(cands, turn_terms, topic_terms, wdf, n_docs=100)
     for r in out.collect():
         assert 0.0 <= r.ctx_cos <= 1.0 + 1e-9
+
+
+def test_tfidf_scoring_runs_no_python(spark, monkeypatch):
+    """Both sides arrive tokenized, so the scoring plan is pure
+    Catalyst. localCheckpoint is patched to a no-op so the plan shows
+    the topic-vector lineage it would otherwise cut off."""
+    turn_terms, cands, topic_terms, wdf = _fixture(spark)
+    monkeypatch.setattr(type(cands), "localCheckpoint", lambda self, eager=True: self)
+    out = L.tfidf_context_scores(cands, turn_terms, topic_terms, wdf, n_docs=100)
+    plan = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "formatted"
+    )
+    assert "BatchEvalPython" not in plan
+    assert "ArrowEvalPython" not in plan
+
+
+def test_dict_topic_terms_golden(spark):
+    """dict_topic_terms is the tokenizer exploded over every (topic,
+    context, weight) of dict_context_vectors: one row per distinct term
+    of each context name."""
+    kb = synth.build_kb(8)
+    built = dictionary_phase(checkpoint_stage, synth.kb_tables(spark, kb))
+    want = sorted(
+        _explode_terms(
+            (r.topic, c, w)
+            for r in built["dict_context_vectors"].collect()
+            for c, w in zip(r.ctx_ids, r.ctx_ws)
+        )
+    )
+    got = sorted(
+        tuple(r)
+        for r in built["dict_topic_terms"].select("topic", "term", "weight1").collect()
+    )
+    assert want and got == want
