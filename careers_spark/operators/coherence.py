@@ -45,7 +45,11 @@ Performance posture (the stage is the pipeline's only Python hot path):
   - turn text is only tokenized for turns holding >= 2 chosen mentions
     (gap-pattern extraction needs nothing else), and the transcripts
     side of the cogroup is pre-filtered to those turns with a slim
-    semi-join so unneeded text never rides the shuffle.
+    semi-join so unneeded text never rides the shuffle;
+  - TF-IDF context-cosine linking (ContextCosine) is scored here too,
+    vectorized per group: the turn terms ride the transcripts side of
+    the same cogroup and the topic term vectors the broadcast, so the
+    scoring adds no shuffle of its own.
 """
 
 from __future__ import annotations
@@ -155,6 +159,151 @@ class InternedContexts:
             cache.clear()
         cache[key] = s
         return s
+
+
+def index_ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated index ranges [starts[i], starts[i] + lens[i])."""
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if len(ends) else 0
+    return np.repeat(starts - ends + lens, lens) + np.arange(total)
+
+
+class ContextCosine:
+    """Anchor-prior x TF-IDF context-cosine linking, scored inside the
+    resolve cogroup. The reference scores document-topic affinity with
+    TF-IDF cosines over context words (TopicVector.scala:47-84; word
+    document frequencies from WordInTopicCount feed the idf):
+
+      idf(term)    : ln((n_turns + 1) / (doc_freq + 1)) over the corpus
+                     turns, 1.0 for terms absent from the corpus
+      topic vector : tw(term) = sum of w * idf(term) over the topic's
+                     TopicTerms entries (context names, tokenized)
+      turn vector  : idf(term) of each distinct term of the turn
+      ctx_cos      : dot / (|topic| * |turn|), 0.0 when nothing overlaps
+                     or a norm is 0 (every shared term in every turn)
+
+    and a candidate's prior becomes prior * (1 + ctx_cos): with no term
+    overlap it stays the anchor prior exactly.
+
+    Built on the driver by `of` and broadcast beside the slim contexts.
+    It carries only the topics that share a term with the corpus (any
+    other topic's cosine is 0): `topics` (sorted interned ids) with
+    their full TopicTerms rows, and the corpus vocabulary `words`
+    (sorted) with its universe ids and idf. Workers derive each
+    carried topic's tw and norm once, on first use.
+    """
+
+    def __init__(self, words, word_uid, idf, topics, ptr, term_ids, weights):
+        self.words = words
+        self.word_uid = word_uid
+        self.idf = idf
+        self.topics = topics
+        self.ptr = ptr
+        self.term_ids = term_ids
+        self.weights = weights
+        self._vectors = None
+        self._word_index = None
+
+    @classmethod
+    def of(cls, topic_terms, word_doc_freq: pd.DataFrame, n_turns: int):
+        """topic_terms: the model's TopicTerms. word_doc_freq: pandas
+        (word, doc_freq) of the corpus turn terms, which must all be
+        words of it (the pipeline derives one from the other)."""
+        uid = pd.Index(topic_terms.terms).get_indexer(word_doc_freq["word"])
+        known = uid >= 0
+        order = np.argsort(uid[known], kind="stable")
+        word_uid = uid[known][order]
+        doc_freq = word_doc_freq["doc_freq"].to_numpy(np.float64)[known][order]
+        lens = np.diff(topic_terms.ptr)
+        row = np.repeat(np.arange(len(lens)), lens)
+        sel = np.unique(row[np.isin(topic_terms.term_ids, word_uid)])
+        entries = index_ranges(topic_terms.ptr[sel], lens[sel])
+        return cls(
+            words=word_doc_freq["word"].to_numpy(object)[known][order].tolist(),
+            word_uid=word_uid,
+            idf=np.log(float(n_turns + 1) / (doc_freq + 1)),
+            topics=topic_terms.topics[sel],
+            ptr=np.concatenate(([0], np.cumsum(lens[sel]))),
+            term_ids=topic_terms.term_ids[entries],
+            weights=topic_terms.weights[entries],
+        )
+
+    def __getstate__(self):
+        d = self.__dict__.copy()
+        d["_vectors"] = d["_word_index"] = None
+        return d
+
+    def _topic_vectors(self):
+        """Per carried topic: its corpus terms as CSR (positions in
+        `words`, tw) and its norm over the FULL vector."""
+        if self._vectors is None:
+            t, n = self.term_ids, len(self.topics)
+            row = np.repeat(np.arange(n), np.diff(self.ptr))
+            pos = np.minimum(np.searchsorted(self.word_uid, t), len(self.word_uid) - 1)
+            hit = self.word_uid[pos] == t
+            prod = self.weights * np.where(hit, self.idf[pos], 1.0)
+            first = np.ones(len(t), bool)
+            first[1:] = (row[1:] != row[:-1]) | (t[1:] != t[:-1])
+            starts = np.flatnonzero(first)
+            tw = np.add.reduceat(prod, starts) if len(t) else prod
+            urow, keep = row[starts], hit[starts]
+            tnorm = np.sqrt(np.bincount(urow, tw * tw, minlength=n))
+            vptr = np.concatenate(([0], np.cumsum(np.bincount(urow[keep], minlength=n))))
+            self._vectors = (vptr, pos[starts][keep], tw[keep], tnorm)
+            self._word_index = pd.Index(self.words)
+        return self._vectors
+
+    def cosines(
+        self,
+        conv_names: pd.Index,
+        conv_code: np.ndarray,
+        turn: np.ndarray,
+        topic_gid: np.ndarray,
+        terms: pd.DataFrame,
+    ) -> np.ndarray:
+        """ctx_cos per candidate row. Candidates: conv_names[conv_code],
+        turn and interned topic id per row. terms: the group's
+        (conv_id, turn_idx, term) turn-term rows, distinct per turn."""
+        out = np.zeros(len(topic_gid))
+        if not len(terms) or not len(self.topics):
+            return out
+        vptr, vpos, vtw, tnorm = self._topic_vectors()
+        n_words = len(self.words)
+
+        # turn side: (turn key, word position) entries, and |turn|
+        t_conv = conv_names.get_indexer(terms["conv_id"])
+        t_pos = self._word_index.get_indexer(terms["term"])
+        ok = (t_conv >= 0) & (t_pos >= 0)
+        t_pos = t_pos[ok]
+        t_key = (t_conv[ok].astype(np.int64) << 32) | terms["turn_idx"].to_numpy(np.int64)[ok]
+        turn_keys, t_inv = np.unique(t_key, return_inverse=True)
+        t_idf = self.idf[t_pos]
+        if not len(turn_keys):
+            return out
+        dnorm = np.sqrt(np.bincount(t_inv, t_idf * t_idf, minlength=len(turn_keys)))
+        entry_keys = np.sort(t_inv.astype(np.int64) * n_words + t_pos)
+
+        # candidate rows whose turn has terms and whose topic is carried
+        c_key = (conv_code.astype(np.int64) << 32) | turn
+        ct = np.minimum(np.searchsorted(turn_keys, c_key), len(turn_keys) - 1)
+        tr = np.minimum(np.searchsorted(self.topics, topic_gid), len(self.topics) - 1)
+        rows = np.flatnonzero((turn_keys[ct] == c_key) & (self.topics[tr] == topic_gid))
+        if not len(rows):
+            return out
+        ct, tr = ct[rows], tr[rows]
+        lens = vptr[tr + 1] - vptr[tr]
+        e = index_ranges(vptr[tr], lens)
+        owner = np.repeat(np.arange(len(rows)), lens)
+        key = ct[owner] * n_words + vpos[e]
+        p = np.minimum(np.searchsorted(entry_keys, key), len(entry_keys) - 1)
+        contrib = np.where(entry_keys[p] == key, vtw[e] * self.idf[vpos[e]], 0.0)
+        dot = np.bincount(owner, contrib, minlength=len(rows))
+        den = tnorm[tr] * dnorm[ct]
+        nz = den > 0
+        cos = np.zeros(len(rows))
+        cos[nz] = dot[nz] / den[nz]
+        out[rows] = cos
+        return out
 
 
 def build_id_dims(spark, surface_names: list[str], topic_names: list[str]):
@@ -675,6 +824,37 @@ def _n_buckets(rows: int, partitions: int) -> int:
     return min(max(-(-rows // _ROWS_PER_BUCKET), partitions), 16 * partitions)
 
 
+def _corpus_counts(
+    mention_spans: DataFrame,
+    transcripts: DataFrame,
+    word_doc_freq: DataFrame | None,
+):
+    """The mention row count and, given word_doc_freq, the corpus turn
+    count and the (word, doc_freq) rows as pandas, read in ONE driver
+    collect. Each count rides as a row whose word no token can be; its
+    single-partition coalesce spares it a shuffle of its own, and its
+    scan reads no column."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    def count(df, tag):
+        return df.coalesce(1).agg(F.count(F.lit(1)).alias("doc_freq")).select(
+            F.lit(tag).alias("word"), "doc_freq"
+        )
+
+    parts = [count(mention_spans, "#mentions")]
+    if word_doc_freq is not None:
+        parts += [
+            count(transcripts, "#turns"),
+            word_doc_freq.select("word", F.col("doc_freq").cast("long")),
+        ]
+    pdf = reduce(DataFrame.unionByName, parts).toPandas()
+    tagged = pdf["word"].str.startswith("#")
+    n = {w: int(c) for w, c in zip(pdf.loc[tagged, "word"], pdf.loc[tagged, "doc_freq"])}
+    return n["#mentions"], n.get("#turns"), pdf[~tagged].reset_index(drop=True)
+
+
 def resolve(
     candidates: DataFrame,
     transcripts: DataFrame,
@@ -682,25 +862,36 @@ def resolve(
     model: "KGModel",
     surface_dim: DataFrame,
     topic_dim: DataFrame,
+    turn_terms: DataFrame | None = None,
+    word_doc_freq: DataFrame | None = None,
 ) -> DataFrame:
     """Cogrouped per-conversation resolution, bucket-batched.
 
     candidates: output of linking.attach_candidates_coded — slim rows
         only (conv_id, turn_idx, start, end, surf_id, topic_id, prior),
-        coded against the model's universes; context vectors ride a
-        BROADCAST, not the shuffle (carrying 30-element arrays per
-        candidate row multiplied shuffle volume ~10x and made this stage
-        I/O-bound).
+        coded against the model's universes, prior the anchor prior;
+        context vectors ride a BROADCAST, not the shuffle (carrying
+        30-element arrays per candidate row multiplied shuffle volume
+        ~10x and made this stage I/O-bound).
     transcripts: (conv_id, turn_idx, text) — needed for gap tokens; only
         turns carrying >= 2 mention spans are shipped (slim semi-join —
         chosen mentions are a subset of mention spans, so the gap pass
         never needs the others).
     mention_spans: the (cheap, usually checkpointed) mentions the
-        candidates were attached to; the gap-eligible turns come from
-        them, since deriving them from `candidates` would evaluate the
-        candidate DAG twice when linking carries the TF-IDF joins.
+        candidates were attached to; the gap-eligible turns and the
+        bucket count come from them, since deriving them from
+        `candidates` would evaluate the candidate attach twice when it
+        is not materialized.
     model: the KGModel — its interned context vectors and its sorted
         topic universe, whose positions are the candidates' topic_id.
+    turn_terms/word_doc_freq: given (both or neither), every prior is
+        first scored by anchor prior x TF-IDF context cosine
+        (ContextCosine) inside the cogroup, before the greedy prune:
+        the (conv_id, turn_idx, term) rows ride the turns side, and the
+        model's topic term vectors ride the context broadcast, cut to
+        the topics sharing a term with word_doc_freq. One driver
+        collect reads word_doc_freq with the corpus turn count (idf)
+        and the mention row count.
     surface_dim/topic_dim: build_id_dims over the model's universes.
         Only ints cross the Arrow boundary in both directions, and names
         are broadcast-joined back JVM-side afterwards; ids are assigned
@@ -723,9 +914,9 @@ def resolve(
     from pyspark.sql import functions as F
 
     spark = candidates.sparkSession
+    n_mentions, n_turns, wdf = _corpus_counts(mention_spans, transcripts, word_doc_freq)
     n_buckets = _n_buckets(
-        mention_spans.count(),
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+        n_mentions, int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     )
 
     interned = model.interned
@@ -747,27 +938,46 @@ def resolve(
     slim.ids = interned.ids
     slim.ws = interned.ws
     slim._cache = {}
-    ctx_bc = spark.sparkContext.broadcast((slim, gid_lut))
+    cosine = None
+    if turn_terms is not None:
+        cosine = ContextCosine.of(model.topic_terms, wdf, n_turns)
+    ctx_bc = spark.sparkContext.broadcast((slim, gid_lut, cosine))
 
     # only turns that can yield a gap pattern need their text shipped
+    # (two distinct spans <=> the smallest span is not the largest: one
+    # shuffle, where a distinct count takes two)
+    span = F.struct("start", "end")
     eligible_turns = (
         mention_spans.groupBy("conv_id", "turn_idx")
-        .agg(F.countDistinct("start", "end").alias("nm"))
-        .filter(F.col("nm") >= 2)
+        .agg((F.min(span) < F.max(span)).alias("multi"))
+        .filter("multi")
         .select("conv_id", "turn_idx")
     )
     turns_slim = transcripts.select("conv_id", "turn_idx", "text").join(
         eligible_turns, ["conv_id", "turn_idx"], "left_semi"
     )
+    if cosine is not None:
+        # term rows carry a null text, text rows a null term
+        turns_slim = turns_slim.withColumn(
+            "term", F.lit(None).cast("string")
+        ).unionByName(
+            turn_terms.select(
+                "conv_id", "turn_idx",
+                F.lit(None).cast("string").alias("text"), "term",
+            )
+        )
 
     bucket = lambda df: df.withColumn(  # noqa: E731
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
     )
 
     def fn(cand_pdf: pd.DataFrame, turns_pdf: pd.DataFrame) -> pd.DataFrame:
-        ctx, lut = ctx_bc.value
+        ctx, lut, cos = ctx_bc.value
         if not len(cand_pdf):
             return _rows_to_pdf_coded([])
+        if cos is not None:
+            is_term = turns_pdf["term"].notna()
+            term_pdf, turns_pdf = turns_pdf[is_term], turns_pdf[~is_term]
 
         conv_code, conv_names = pd.factorize(cand_pdf["conv_id"], sort=True)
         surf_code = cand_pdf["surf_id"].to_numpy(np.int64)
@@ -777,6 +987,11 @@ def resolve(
         start = cand_pdf["start"].to_numpy(np.int64)
         end = cand_pdf["end"].to_numpy(np.int64)
         prior = cand_pdf["prior"].to_numpy(np.float64)
+
+        if cos is not None:
+            prior = prior * (
+                1 + cos.cosines(conv_names, conv_code, turn, lut[topic_code], term_pdf)
+            )
 
         order = np.lexsort((topic_code, end, start, turn, conv_code))
         conv_code = conv_code[order]

@@ -3,11 +3,11 @@
 The reference materializes its dictionary as binary model files built
 once and memory-mapped by every consumer (phraseMap.bin etc., built in
 testDisambiguator.scala:70-165, loaded at Disambiguator.scala:219-227).
-The Spark analogue: the Aho-Corasick automaton + the per-topic context
-map, built once from the dictionary tables, pickled next to the
-dictionary checkpoint, and broadcast by the corpus phase — so repeated
-processing runs (and both cluster sizes of the scaling bench) skip the
-collect+build entirely.
+The Spark analogue: the Aho-Corasick automaton, the per-topic context
+map and the per-topic TF-IDF term vectors, built once from the
+dictionary tables, pickled next to the dictionary checkpoint, and
+broadcast by the corpus phase — so repeated processing runs (and both
+cluster sizes of the scaling bench) skip the collect+build entirely.
 """
 
 from __future__ import annotations
@@ -17,9 +17,11 @@ import pickle
 import tempfile
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame
 
-from careers_spark.operators.coherence import InternedContexts
+from careers_spark.functions.text import tokenize_py
+from careers_spark.operators.coherence import InternedContexts, index_ranges
 from careers_spark.operators.mentions import TokenAhoCorasick
 
 
@@ -32,6 +34,63 @@ def name_universes(surface_forms: DataFrame) -> tuple[list[str], list[str]]:
         raise MemoryError(f"dictionary too large to broadcast: {n_sf} pairs")
     pairs = sf_dim.collect()
     return sorted({r.surface for r in pairs}), sorted({r.topic for r in pairs})
+
+
+class TopicTerms:
+    """The topic side of the TF-IDF context cosine (TopicVector.scala:
+    47-84): each topic's context NAMES, tokenized, interned like
+    InternedContexts.
+
+    terms: the sorted term universe, every distinct tokenize_py token of
+        a context name (the corpus-side TF-IDF vocabulary).
+    topics: sorted interned ids (InternedContexts.tid) of the topics
+        with at least one term; row r spans entries ptr[r]:ptr[r + 1].
+    term_ids / weights: one entry per (context of the topic, distinct
+        token of that context's name), carrying the context's weight,
+        sorted by term id within a row — a term held by two contexts of
+        one topic has two entries.
+    """
+
+    def __init__(self, terms, topics, ptr, term_ids, weights):
+        self.terms = terms
+        self.topics = topics
+        self.ptr = ptr
+        self.term_ids = term_ids
+        self.weights = weights
+
+    @classmethod
+    def of(cls, interned: InternedContexts) -> "TopicTerms":
+        """Tokenizes each distinct context name once."""
+        gids = np.fromiter(
+            (g for g, a in enumerate(interned.ids) if len(a)), np.int64
+        )
+        n_ctx = np.fromiter((len(interned.ids[g]) for g in gids), np.int64, len(gids))
+        empty_i, empty_w = np.empty(0, np.int64), np.empty(0, np.float64)
+        ctx = np.concatenate([interned.ids[g] for g in gids] or [empty_i])
+        ws = np.concatenate([interned.ws[g] for g in gids] or [empty_w])
+        ctx_names, ctx_inv = np.unique(ctx, return_inverse=True)
+        toks = [dict.fromkeys(tokenize_py(interned.names[c])) for c in ctx_names]
+        terms = sorted({t for ts in toks for t in ts})
+        term_of = {t: i for i, t in enumerate(terms)}
+        n_tok = np.fromiter((len(ts) for ts in toks), np.int64, len(toks))
+        tok_ids = np.fromiter(
+            (term_of[t] for ts in toks for t in ts), np.int32, int(n_tok.sum())
+        )
+        tok_start = np.cumsum(n_tok) - n_tok
+        # every (topic, context, weight) entry -> its context's tokens
+        per = n_tok[ctx_inv]
+        entry = np.repeat(np.arange(len(ctx)), per)
+        term_ids = tok_ids[index_ranges(tok_start[ctx_inv], per)]
+        row = np.repeat(np.repeat(np.arange(len(gids)), n_ctx), per)
+        order = np.lexsort((term_ids, row))
+        counts = np.bincount(row, minlength=len(gids))
+        return cls(
+            terms=terms,
+            topics=gids[counts > 0],
+            ptr=np.concatenate(([0], np.cumsum(counts[counts > 0]))),
+            term_ids=term_ids[order],
+            weights=ws[entry][order],
+        )
 
 
 @dataclass
@@ -49,9 +108,13 @@ class KGModel:
     # scaling level)
     interned: InternedContexts
 
+    # the TF-IDF topic term vectors, read by batch linking only; the
+    # streaming sink links on anchor priors and builds its model without
+    topic_terms: TopicTerms | None = None
+
     # bump when the pickled layout changes: build_or_load rebuilds stale
     # cache files instead of loading a model missing newer fields
-    VERSION = 4
+    VERSION = 5
     version: int = VERSION
 
     # heap guard: the model is a driver-collected broadcast dim, the same
@@ -83,6 +146,7 @@ class KGModel:
             surface_names=surface_names,
             topic_names=topic_names,
             interned=interned,
+            topic_terms=TopicTerms.of(interned),
         )
 
     def save(self, path: str) -> None:

@@ -292,15 +292,15 @@ def checkpoint_stage(
 def dictionary_phase(
     stage, raw_tables: dict[str, DataFrame]
 ) -> dict[str, DataFrame]:
-    """raw synth/dump tables -> the six dictionary stages.
+    """raw synth/dump tables -> the five dictionary stages, all of them
+    Catalyst: the context names are tokenized for TF-IDF linking by
+    KGModel.build, once per dictionary.
 
     As in the reference model build, allowedContext filters the raw
     context table (Disambiguator.scala:43-102) and sparse topics inherit
     second-order contexts at x0.1 (Disambiguator.scala:469-490;
     precomputed here, which is the reference's own TODO at
-    AmbiguityForest.scala:46-48). dict_topic_terms holds the context
-    names tokenized for TF-IDF linking, once per dictionary rather than
-    once per corpus run."""
+    AmbiguityForest.scala:46-48)."""
     redirects = stage(
         "dict_redirects", lambda: D.resolve_redirects(raw_tables["redirects"])
     )
@@ -321,9 +321,6 @@ def dictionary_phase(
         "dict_context_vectors",
         lambda: D.topic_context_vectors(D.top_contexts(link_w)),
     )
-    topic_terms = stage(
-        "dict_topic_terms", lambda: L.topic_terms(context_vectors)
-    )
     canon = stage(
         "canonical_map",
         lambda: CZ.canonical_mapping(redirects, raw_tables["same_as"]),
@@ -333,7 +330,6 @@ def dictionary_phase(
         "dict_surface_forms": surface_forms,
         "dict_link_weights": link_w,
         "dict_context_vectors": context_vectors,
-        "dict_topic_terms": topic_terms,
         "canonical_map": canon,
     }
 
@@ -355,8 +351,7 @@ def corpus_phase(
         lambda: transcripts.sortWithinPartitions("conv_id", "turn_idx"),
     )
     resolved = link_and_resolve(
-        stage, turns, dict_outputs["dict_surface_forms"], model,
-        topic_terms=dict_outputs["dict_topic_terms"] if tfidf else None,
+        stage, turns, dict_outputs["dict_surface_forms"], model, tfidf=tfidf
     )
     canon = dict_outputs["canonical_map"]
     triples = stage(
@@ -380,22 +375,24 @@ def link_and_resolve(
     transcripts: DataFrame,
     surface_forms: DataFrame,
     model: KGModel,
-    topic_terms: DataFrame | None = None,
+    tfidf: bool = False,
 ) -> DataFrame:
     """transcripts -> mentions -> coded candidates -> resolved.
 
     Candidates carry dictionary-coded ids (lexicographic ints; the
     coherence tie-break contract): surface/topic STRINGS leave the plan
-    at the first broadcast join, so every TF-IDF shuffle, the candidates
-    checkpoint and the resolve cogroup carry small ints (memory
-    bandwidth is the scaling limiter on shared-socket hosts, and string
-    keys are its biggest tax). Names join back inside `resolved`.
+    at the first broadcast join, so the candidates table and the
+    resolve cogroup carry small ints (memory bandwidth is the scaling
+    limiter on shared-socket hosts, and string keys are its biggest
+    tax). Names join back inside `resolved`.
 
-    topic_terms: the dictionary's tokenized context names
-    (dict_topic_terms); given, the candidates are re-scored by anchor
-    prior x TF-IDF context cosine (stages turn_terms, word_doc_freq,
-    candidates). The streaming sink passes None, on purpose: idf is a
-    corpus-wide statistic, so a per-poll idf would make a
+    tfidf: the candidates are scored by anchor prior x TF-IDF context
+    cosine inside the resolve cogroup (coherence.ContextCosine). The
+    corpus is tokenized once into turn_terms, restricted to the model's
+    term universe, and counted into word_doc_freq; the candidates stage
+    holds the plain anchor-prior attach, and the topic term vectors
+    ride the model. The streaming sink links without it, on purpose:
+    idf is a corpus-wide statistic, so a per-poll idf would make a
     conversation's links depend on which poll delivered it. Linked on
     anchor priors, a conversation resolves from its own turns and the
     dictionary alone, whichever poll carries it.
@@ -404,52 +401,51 @@ def link_and_resolve(
     mentions = stage(
         "mentions", lambda: M.detect_mentions(spark, transcripts, model.automaton)
     )
-    # one pair of id dims for the candidate attach, the TF-IDF context
-    # join and resolve's name join-back
+    # one pair of id dims for the candidate attach and resolve's name
+    # join-back
     surface_dim, topic_dim = CO.build_id_dims(
         spark, model.surface_names, model.topic_names
     )
-    # plain candidate attach is a cheap broadcast join — computed inside
-    # the resolved stage rather than checkpointed. TF-IDF scoring adds
-    # several fact-side shuffles, so its candidates ARE checkpointed (the
-    # cogroup then reads a flat table instead of recomputing a 4-shuffle
-    # DAG inside its job).
+    # the attach is one broadcast join: without TF-IDF it is computed
+    # inside the resolved stage rather than checkpointed
     candidates = L.attach_candidates_coded(
         mentions, surface_forms, surface_dim, topic_dim
     )
-    if topic_terms is not None:
-        candidates = _tfidf_candidates(
-            stage, transcripts, candidates, topic_terms, topic_dim
-        )
+    turn_terms = wdf = None
+    if tfidf:
+        turn_terms, wdf = _turn_terms(stage, transcripts, model)
+        attached = candidates
+        candidates = stage("candidates", lambda: attached)
     return stage(
         "resolved",
         lambda: CO.resolve(
-            candidates, transcripts, mentions, model, surface_dim, topic_dim
+            candidates, transcripts, mentions, model, surface_dim, topic_dim,
+            turn_terms=turn_terms, word_doc_freq=wdf,
         ),
     )
 
 
-def _tfidf_candidates(
-    stage,
-    transcripts: DataFrame,
-    candidates: DataFrame,
-    topic_terms: DataFrame,
-    topic_dim: DataFrame,
-) -> DataFrame:
-    """Candidates re-scored by anchor prior x TF-IDF context cosine. The
-    corpus is tokenized ONCE (turn_terms stage) and the pass is shared
-    by word_doc_freq + the cosine joins; the context names come
-    tokenized from the dictionary (dict_topic_terms), so no other
-    Python UDF runs here."""
+def _turn_terms(
+    stage, transcripts: DataFrame, model: KGModel
+) -> tuple[DataFrame, DataFrame]:
+    """The corpus side of TF-IDF linking: the turn_terms stage, the
+    distinct terms of each turn, tokenized ONCE, and their per-term turn
+    counts (word_doc_freq)."""
     from careers_spark.functions.text import tokenize_udf
 
+    if model.topic_terms is None:
+        raise ValueError("TF-IDF linking needs a model built with topic term vectors")
     # cosine dot products only ever touch terms that occur in topic
-    # context NAMES — a dictionary-sized vocabulary. The scan-side
-    # explode is semi-joined to it immediately, so the materialized
-    # turn_terms table is ~vocab-hit tokens, not the full corpus token
-    # stream (30x+ at bench scale). Per-term doc frequencies (hence idf)
-    # are unchanged by dropping other terms, so scoring is exact.
-    vocab = topic_terms.select("term").distinct()
+    # context NAMES — the model's dictionary-sized term universe. The
+    # scan-side explode is semi-joined to it immediately, so the
+    # materialized turn_terms table is ~vocab-hit tokens, not the full
+    # corpus token stream (30x+ at bench scale). Per-term doc
+    # frequencies (hence idf) are unchanged by dropping other terms, so
+    # scoring is exact.
+    vocab = transcripts.sparkSession.createDataFrame(
+        pd.DataFrame({"term": model.topic_terms.terms}, dtype=object),
+        schema="term string",
+    )
     turn_terms = stage(
         "turn_terms",
         lambda: transcripts.select(
@@ -464,13 +460,4 @@ def _tfidf_candidates(
             F.count("*").alias("doc_freq")
         ),
     )
-    n_turns = transcripts.count()
-    coded_terms = topic_terms.join(F.broadcast(topic_dim), "topic").drop("topic")
-    return stage(
-        "candidates",
-        lambda: L.tfidf_context_scores(
-            candidates, turn_terms, coded_terms, wdf, n_docs=n_turns
-        )
-        .withColumn("prior", F.col("score"))
-        .drop("score", "ctx_cos"),
-    )
+    return turn_terms, wdf

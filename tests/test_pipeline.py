@@ -172,10 +172,10 @@ def test_pipeline_output_determinism(spark, kb, tmp_path):
 
 
 def test_tfidf_pipeline_preserves_pr(spark, kb, tmp_path):
-    """TF-IDF context-cosine enabled end-to-end: the synth corpus has no
-    context-name words in turn text, so scores reduce to priors and the
-    triple set is unchanged (the identity guarantee), while the stage
-    itself exercises the full join path."""
+    """TF-IDF context-cosine enabled end-to-end leaves the synth
+    corpus's triple set unchanged. The scores themselves are checked
+    against the Spark formulation in
+    test_tfidf_linking.py::test_run_corpus_scores_match_oracle."""
     transcripts = spark.createDataFrame(
         synth.gen_transcripts_pdf(kb, 15), schema=S.TRANSCRIPTS
     )
@@ -203,6 +203,23 @@ def test_lineage_checksums(spark, kb, tmp_path):
     lin = spark.read.parquet(str(tmp_path / "w" / "_lineage"))
     rows = lin.filter("stage = 'mentions'").collect()
     assert rows and all(r.checksum is not None for r in rows)
+
+
+def test_build_or_load_rebuilds_v4_model(spark, kb, tmp_path):
+    """A cached VERSION-4 model (no topic term vectors) is rebuilt, not
+    loaded: TF-IDF linking reads the term vectors from the model."""
+    from careers_spark.operators.model import KGModel
+
+    d = KGPipeline(spark, str(tmp_path / "w")).run_dictionary(synth.kb_tables(spark, kb))
+    sf, cv = d.outputs["dict_surface_forms"], d.outputs["dict_context_vectors"]
+    path = str(tmp_path / "model.pkl")
+    old = KGModel.build(sf, cv)
+    old.topic_terms, old.version = None, 4
+    old.save(path)
+    m = KGModel.build_or_load(sf, cv, path)
+    assert m.version == KGModel.VERSION == 5
+    assert m.topic_terms is not None and m.topic_terms.terms
+    assert KGModel.load(path).topic_terms is not None
 
 
 def test_model_build_heap_guard(spark):

@@ -26,6 +26,10 @@ for cpus in (8, 32):
         "conv_id", "turn_idx", "text"
     )
     mentions = spark.read.parquet("/tmp/kg_scale_run_8/mentions")
+    # the candidates table holds anchor priors: resolve scores them by
+    # TF-IDF context cosine from the run's turn terms and doc freqs
+    turn_terms = spark.read.parquet("/tmp/kg_scale_run_8/turn_terms")
+    wdf = spark.read.parquet("/tmp/kg_scale_run_8/word_doc_freq")
     ctx = spark.read.parquet("/tmp/kg_scale_dict/dict_context_vectors")
     # the candidates table is dictionary-coded: resolve needs the
     # model's name universes (as id dims) to join names back
@@ -54,7 +58,8 @@ for cpus in (8, 32):
     comod._resolve_conv = timed
     t0 = time.monotonic()
     n = CO.resolve(
-        cand, turns, mentions, model, surface_dim, topic_dim
+        cand, turns, mentions, model, surface_dim, topic_dim,
+        turn_terms=turn_terms, word_doc_freq=wdf,
     ).count()
     wall = time.monotonic() - t0
     comod._resolve_conv = orig_resolve
