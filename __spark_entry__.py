@@ -1753,7 +1753,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ac.add(surf)
         ac.build()
         men = MEN.detect_mentions(spark, documents_as_transcripts(docs), ac)
-        return DICT.phrase_doc_freq(men)
+        return DICT.phrase_doc_freq(men.filter("kind = 'mention'"))
 
     q["phrase_doc_freq"] = phrase_doc_freq
 

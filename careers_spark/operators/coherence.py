@@ -25,9 +25,11 @@ site/alternative builder Disambiguator.scala:105-208):
   - predicates: the deterministic gap-token pattern rules
     (careers_spark.synth.PRED_PATTERNS) applied between adjacent resolved
     mentions in the same turn — the "dependency-pattern triple extraction
-    in the same batched UDF pass" of the north star.
+    in the same batched UDF pass" of the north star. The mention scan
+    finds every pattern occurrence in the same token pass as the
+    mentions; a gap holds a pattern exactly when an occurrence spans it.
 
-Runs as a cogrouped applyInPandas over (candidates, turns) keyed by
+Runs as a cogrouped applyInPandas over (candidates, scan facts) keyed by
 conv_id — the conversation IS the coherence window, so no cross-group
 state exists and the stage parallelizes embarrassingly.
 
@@ -42,13 +44,12 @@ Performance posture (the stage is the pipeline's only Python hot path):
     the per-conversation cache of round 1 wasted that reuse);
   - candidate batches are processed as numpy column slices (lexsort +
     boundary splits), not per-row python tuples;
-  - turn text is only tokenized for turns holding >= 2 chosen mentions
-    (gap-pattern extraction needs nothing else), and the transcripts
-    side of the cogroup is pre-filtered to those turns with a slim
-    semi-join so unneeded text never rides the shuffle;
+  - no turn text reaches the stage: the cogroup's second side is the
+    mention scan's pattern hits (and turn terms), a few int-spanned rows
+    per turn, so nothing is tokenized here;
   - TF-IDF context-cosine linking (ContextCosine) is scored here too,
-    vectorized per group: the turn terms ride the transcripts side of
-    the same cogroup and the topic term vectors the broadcast, so the
+    vectorized per group: the turn terms ride the second side of the
+    same cogroup and the topic term vectors the broadcast, so the
     scoring adds no shuffle of its own.
 """
 
@@ -59,9 +60,6 @@ from typing import TYPE_CHECKING
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-
-from careers_spark.functions.text import tokenize_py
-from careers_spark.synth import PRED_PATTERNS
 
 if TYPE_CHECKING:
     from careers_spark.operators.model import KGModel
@@ -631,7 +629,7 @@ def _resolve_conv(
     topic_code: list,
     topic_gid: list,
     prior: list,
-    turns_text: dict[int, str],
+    preds: dict[tuple[int, int, int], str],
     ctx: InternedContexts,
     out_rows: list[tuple],
 ) -> None:
@@ -645,7 +643,8 @@ def _resolve_conv(
     reference's name-ordered tie-breaks), topic_gid the interned ctx
     id (-1 when unknown). Appends code-valued rows (surf/topic/obj as
     ints) to out_rows; the caller ships them as-is for a JVM-side
-    broadcast name join.
+    broadcast name join. preds: the conversation's pattern hits,
+    (turn, start, end) -> predicate (see resolve).
     """
     # --- mention boundaries (same (turn,start,end) -> one mention) --------
     m_first: list[int] = [lo]
@@ -770,17 +769,15 @@ def _resolve_conv(
         )
 
     # --- triple extraction over adjacent resolved mentions ----------------
+    # the gap tokens between a and b hold a pattern exactly when a hit
+    # spans them
     by_turn: dict[int, list[int]] = {}
     for i in chosen:
         by_turn.setdefault(spans[i][0], []).append(i)
     for t, idxs in by_turn.items():
-        if len(idxs) < 2:
-            continue  # no adjacent pair -> no gap to inspect (skip tokenize)
-        toks = tokenize_py(turns_text.get(t, ""))
         idxs.sort(key=lambda i: spans[i][1])
         for a, b in zip(idxs, idxs[1:]):
-            gap = " ".join(toks[spans[a][2] + 1: spans[b][1]])
-            pred = PRED_PATTERNS.get(gap)
+            pred = preds.get((t, spans[a][2] + 1, spans[b][1] - 1))
             if pred is not None:
                 out_rows.append(
                     (
@@ -858,11 +855,10 @@ def _corpus_counts(
 def resolve(
     candidates: DataFrame,
     transcripts: DataFrame,
-    mention_spans: DataFrame,
+    mentions: DataFrame,
     model: "KGModel",
     surface_dim: DataFrame,
     topic_dim: DataFrame,
-    turn_terms: DataFrame | None = None,
     word_doc_freq: DataFrame | None = None,
 ) -> DataFrame:
     """Cogrouped per-conversation resolution, bucket-batched.
@@ -873,25 +869,23 @@ def resolve(
         context vectors ride a BROADCAST, not the shuffle (carrying
         30-element arrays per candidate row multiplied shuffle volume
         ~10x and made this stage I/O-bound).
-    transcripts: (conv_id, turn_idx, text) — needed for gap tokens; only
-        turns carrying >= 2 mention spans are shipped (slim semi-join —
-        chosen mentions are a subset of mention spans, so the gap pass
-        never needs the others).
-    mention_spans: the (cheap, usually checkpointed) mentions the
-        candidates were attached to; the gap-eligible turns and the
-        bucket count come from them, since deriving them from
-        `candidates` would evaluate the candidate attach twice when it
-        is not materialized.
+    transcripts: the corpus turns; only counted, for idf's turn count.
+    mentions: the (cheap, usually checkpointed) mention-scan rows the
+        candidates were attached to (mentions.detect_mentions). Its
+        mention rows give the bucket count, since counting `candidates`
+        would evaluate the candidate attach twice when it is not
+        materialized. Its other rows are the cogroup's second side: the
+        pattern hits, which the gap rule looks up by (turn, start, end),
+        and the turn terms. No text crosses the cogroup.
     model: the KGModel — its interned context vectors and its sorted
         topic universe, whose positions are the candidates' topic_id.
-    turn_terms/word_doc_freq: given (both or neither), every prior is
-        first scored by anchor prior x TF-IDF context cosine
-        (ContextCosine) inside the cogroup, before the greedy prune:
-        the (conv_id, turn_idx, term) rows ride the turns side, and the
-        model's topic term vectors ride the context broadcast, cut to
-        the topics sharing a term with word_doc_freq. One driver
-        collect reads word_doc_freq with the corpus turn count (idf)
-        and the mention row count.
+    word_doc_freq: given, every prior is first scored by anchor prior x
+        TF-IDF context cosine (ContextCosine) inside the cogroup, before
+        the greedy prune, from the scan's term rows; the model's topic
+        term vectors ride the context broadcast, cut to the topics
+        sharing a term with word_doc_freq. One driver collect reads
+        word_doc_freq with the corpus turn count (idf) and the mention
+        row count.
     surface_dim/topic_dim: build_id_dims over the model's universes.
         Only ints cross the Arrow boundary in both directions, and names
         are broadcast-joined back JVM-side afterwards; ids are assigned
@@ -903,18 +897,20 @@ def resolve(
     and one pandas group carries many conversations — this amortizes
     the per-group Arrow/Python round-trip that dominates at small group
     sizes (same motivation as the reference loading its model once per
-    task, not once per record). The bucket count follows the row count
-    of the materialized mention_spans (_n_buckets): a small corpus gets
-    one bucket per shuffle partition, since AQE coalesces its shuffle
-    into a task or two that run every group's round-trip serially; a
-    large one gets 16 per partition. Results do not depend on the
-    count. Conversations over _MAX_ROWS_PER_CONV
-    candidate rows resolve in coherence windows (_conv_windows).
+    task, not once per record). The bucket count follows the mention
+    row count (_n_buckets): a small corpus gets one bucket per shuffle
+    partition, since AQE coalesces its shuffle into a task or two that
+    run every group's round-trip serially; a large one gets 16 per
+    partition. Results do not depend on the count. Conversations over
+    _MAX_ROWS_PER_CONV candidate rows resolve in coherence windows
+    (_conv_windows).
     """
     from pyspark.sql import functions as F
 
     spark = candidates.sparkSession
-    n_mentions, n_turns, wdf = _corpus_counts(mention_spans, transcripts, word_doc_freq)
+    n_mentions, n_turns, wdf = _corpus_counts(
+        mentions.filter("kind = 'mention'"), transcripts, word_doc_freq
+    )
     n_buckets = _n_buckets(
         n_mentions, int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     )
@@ -939,45 +935,24 @@ def resolve(
     slim.ws = interned.ws
     slim._cache = {}
     cosine = None
-    if turn_terms is not None:
+    if word_doc_freq is not None:
         cosine = ContextCosine.of(model.topic_terms, wdf, n_turns)
     ctx_bc = spark.sparkContext.broadcast((slim, gid_lut, cosine))
 
-    # only turns that can yield a gap pattern need their text shipped
-    # (two distinct spans <=> the smallest span is not the largest: one
-    # shuffle, where a distinct count takes two)
-    span = F.struct("start", "end")
-    eligible_turns = (
-        mention_spans.groupBy("conv_id", "turn_idx")
-        .agg((F.min(span) < F.max(span)).alias("multi"))
-        .filter("multi")
-        .select("conv_id", "turn_idx")
+    # fresh attribute ids: the candidates derive from the same scan, and
+    # a cogroup of two sides sharing a lineage is an ambiguous self-join
+    facts = mentions.filter("kind <> 'mention'").select(
+        *(F.col(c).alias(c) for c in ("conv_id", "turn_idx", "kind", "start", "end", "surface"))
     )
-    turns_slim = transcripts.select("conv_id", "turn_idx", "text").join(
-        eligible_turns, ["conv_id", "turn_idx"], "left_semi"
-    )
-    if cosine is not None:
-        # term rows carry a null text, text rows a null term
-        turns_slim = turns_slim.withColumn(
-            "term", F.lit(None).cast("string")
-        ).unionByName(
-            turn_terms.select(
-                "conv_id", "turn_idx",
-                F.lit(None).cast("string").alias("text"), "term",
-            )
-        )
 
     bucket = lambda df: df.withColumn(  # noqa: E731
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
     )
 
-    def fn(cand_pdf: pd.DataFrame, turns_pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(cand_pdf: pd.DataFrame, facts_pdf: pd.DataFrame) -> pd.DataFrame:
         ctx, lut, cos = ctx_bc.value
         if not len(cand_pdf):
             return _rows_to_pdf_coded([])
-        if cos is not None:
-            is_term = turns_pdf["term"].notna()
-            term_pdf, turns_pdf = turns_pdf[is_term], turns_pdf[~is_term]
 
         conv_code, conv_names = pd.factorize(cand_pdf["conv_id"], sort=True)
         surf_code = cand_pdf["surf_id"].to_numpy(np.int64)
@@ -988,9 +963,14 @@ def resolve(
         end = cand_pdf["end"].to_numpy(np.int64)
         prior = cand_pdf["prior"].to_numpy(np.float64)
 
+        kind = facts_pdf["kind"]
         if cos is not None:
+            terms = facts_pdf.loc[kind == "term", ["conv_id", "turn_idx", "surface"]]
             prior = prior * (
-                1 + cos.cosines(conv_names, conv_code, turn, lut[topic_code], term_pdf)
+                1 + cos.cosines(
+                    conv_names, conv_code, turn, lut[topic_code],
+                    terms.rename(columns={"surface": "term"}),
+                )
             )
 
         order = np.lexsort((topic_code, end, start, turn, conv_code))
@@ -1008,15 +988,17 @@ def resolve(
         gid_l = topic_gid.tolist()
         prior_l = prior[order].tolist()
 
-        # turn texts per conversation (only eligible turns arrive)
-        texts_by_conv: dict[str, dict[int, str]] = {}
-        if len(turns_pdf):
-            for c, ti, tx in zip(
-                turns_pdf["conv_id"].to_numpy(),
-                turns_pdf["turn_idx"].to_numpy(),
-                turns_pdf["text"].to_numpy(),
-            ):
-                texts_by_conv.setdefault(c, {})[int(ti)] = tx
+        # pattern hits per conversation: (turn, start, end) -> predicate
+        preds_by_conv: dict[str, dict[tuple[int, int, int], str]] = {}
+        hits = facts_pdf[kind == "pred"]
+        for c, t, s, e, p in zip(
+            hits["conv_id"],
+            hits["turn_idx"].tolist(),
+            hits["start"].tolist(),
+            hits["end"].tolist(),
+            hits["surface"],
+        ):
+            preds_by_conv.setdefault(c, {})[(t, s, e)] = p
 
         # conversation boundaries in the sorted batch
         bounds = np.flatnonzero(np.diff(conv_code)) + 1
@@ -1026,7 +1008,7 @@ def resolve(
         for k in range(len(starts) - 1):
             lo, hi = int(starts[k]), int(starts[k + 1])
             cid = conv_names[conv_code[lo]]
-            texts = texts_by_conv.get(cid, {})
+            preds = preds_by_conv.get(cid, {})
             for wlo, whi in _conv_windows(
                 lo, hi, turn_l, start_l, end_l, _MAX_ROWS_PER_CONV
             ):
@@ -1036,7 +1018,7 @@ def resolve(
                     surf_l,
                     topic_l, gid_l,
                     prior_l,
-                    texts,
+                    preds,
                     ctx,
                     rows,
                 )
@@ -1048,7 +1030,7 @@ def resolve(
     out = (
         bucket(cand_in)
         .groupby("bucket")
-        .cogroup(bucket(turns_slim).groupby("bucket"))
+        .cogroup(bucket(facts).groupby("bucket"))
         .applyInPandas(fn, schema=RESOLVED_CODED_SCHEMA)
     )
     obj_dim = topic_dim.select(

@@ -12,6 +12,11 @@ PhraseCount.scala:32-51,160-165), and applied inside an Arrow-batched
 overlap structure is exactly what the coherence stage's ambiguity sites
 consume (AmbiguityForest.scala:574-619).
 
+The same pass also finds the predicate patterns and, for TF-IDF
+linking, the turn terms, so each turn is tokenized once and its one
+token stream feeds every rule that reads it (as the reference's phrase
+matcher and pattern rules share one token stream, utility.scala:411-437).
+
 Spans are token indices, inclusive on both ends.
 """
 
@@ -24,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from careers_spark import schema as S
 from careers_spark.functions.text import tokenize_py
+from careers_spark.synth import PRED_PATTERNS
 
 
 class TokenAhoCorasick:
@@ -85,29 +91,65 @@ class TokenAhoCorasick:
         return res
 
 
-def detect_mentions(
-    spark: SparkSession, transcripts: DataFrame, automaton: TokenAhoCorasick
-) -> DataFrame:
-    """transcripts -> mentions(conv_id, turn_idx, start, end, surface).
+# the predicate rules' gap phrases, found by the mention scan: a key
+# occurs at (start, end) exactly when those tokens, joined by spaces,
+# equal it
+PRED_AUTOMATON = TokenAhoCorasick()
+for _key in PRED_PATTERNS:
+    PRED_AUTOMATON.add(_key)
+PRED_AUTOMATON.build()
 
-    One Arrow batch in, one mention batch out; the automaton is
-    deserialized once per python worker (broadcast.value caching), the
-    analogue of the MR once-per-task setup() load.
+
+def turn_rows(
+    toks: list[str], automaton: TokenAhoCorasick, terms: frozenset
+) -> list[tuple[str, int, int, str]]:
+    """(kind, start, end, surface) scan rows of one tokenized turn:
+
+    mention: every dictionary phrase occurrence, overlapping or nested.
+    pred:    every PRED_PATTERNS key occurrence; surface holds its
+             predicate.
+    term:    every distinct token in `terms`, at its first position,
+             in first-occurrence order.
     """
-    bc = spark.sparkContext.broadcast(automaton)
+    rows = [("mention", s, e, surface) for s, e, surface in automaton.scan(toks)]
+    rows += [("pred", s, e, PRED_PATTERNS[key]) for s, e, key in PRED_AUTOMATON.scan(toks)]
+    if terms:
+        for t in dict.fromkeys(toks):
+            if t in terms:
+                i = toks.index(t)
+                rows.append(("term", i, i, t))
+    return rows
+
+
+def detect_mentions(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    automaton: TokenAhoCorasick,
+    terms: list[str] | None = None,
+) -> DataFrame:
+    """transcripts -> scan rows (conv_id, turn_idx, kind, start, end,
+    surface), kind one of mention / pred / term (turn_rows); term rows
+    only for a given TF-IDF term universe `terms`.
+
+    One Arrow batch in, one row batch out; the automaton and the terms
+    are deserialized once per python worker (broadcast.value caching),
+    the analogue of the MR once-per-task setup() load.
+    """
+    bc = spark.sparkContext.broadcast((automaton, frozenset(terms or ())))
 
     def scan(batches):
-        ac = bc.value
+        ac, vocab = bc.value
         for pdf in batches:
             rows = []
             for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
+                pdf["conv_id"], pdf["turn_idx"].tolist(), pdf["text"]
             ):
-                toks = tokenize_py(text)
-                for start, end, surface in ac.scan(toks):
-                    rows.append((conv_id, int(turn_idx), start, end, surface))
+                rows.extend(
+                    (conv_id, turn_idx) + r
+                    for r in turn_rows(tokenize_py(text), ac, vocab)
+                )
             out = pd.DataFrame(
-                rows, columns=["conv_id", "turn_idx", "start", "end", "surface"]
+                rows, columns=["conv_id", "turn_idx", "kind", "start", "end", "surface"]
             )
             out["turn_idx"] = out["turn_idx"].astype("int32")
             out["start"] = out["start"].astype("int32")

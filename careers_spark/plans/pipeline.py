@@ -379,6 +379,11 @@ def link_and_resolve(
 ) -> DataFrame:
     """transcripts -> mentions -> coded candidates -> resolved.
 
+    The mentions stage is the corpus's one token pass
+    (mentions.detect_mentions), partitioned by row kind: the dictionary
+    mentions, the predicate-pattern hits and, with TF-IDF, the turn
+    terms. Later stages read the kinds they need by partition.
+
     Candidates carry dictionary-coded ids (lexicographic ints; the
     coherence tie-break contract): surface/topic STRINGS leave the plan
     at the first broadcast join, so the candidates table and the
@@ -388,18 +393,26 @@ def link_and_resolve(
 
     tfidf: the candidates are scored by anchor prior x TF-IDF context
     cosine inside the resolve cogroup (coherence.ContextCosine). The
-    corpus is tokenized once into turn_terms, restricted to the model's
-    term universe, and counted into word_doc_freq; the candidates stage
-    holds the plain anchor-prior attach, and the topic term vectors
-    ride the model. The streaming sink links without it, on purpose:
-    idf is a corpus-wide statistic, so a per-poll idf would make a
-    conversation's links depend on which poll delivered it. Linked on
-    anchor priors, a conversation resolves from its own turns and the
-    dictionary alone, whichever poll carries it.
+    scan emits each turn's distinct terms in the model's term universe
+    (the cosine only touches context-name terms, and dropping the other
+    tokens leaves every kept term's doc frequency, hence its idf,
+    unchanged); turn_terms reads them back and word_doc_freq counts
+    them. The
+    candidates stage holds the plain anchor-prior attach, and the topic
+    term vectors ride the model. The streaming sink links without it,
+    on purpose: idf is a corpus-wide statistic, so a per-poll idf would
+    make a conversation's links depend on which poll delivered it.
+    Linked on anchor priors, a conversation resolves from its own turns
+    and the dictionary alone, whichever poll carries it.
     """
     spark = transcripts.sparkSession
+    if tfidf and model.topic_terms is None:
+        raise ValueError("TF-IDF linking needs a model built with topic term vectors")
+    terms = model.topic_terms.terms if tfidf else None
     mentions = stage(
-        "mentions", lambda: M.detect_mentions(spark, transcripts, model.automaton)
+        "mentions",
+        lambda: M.detect_mentions(spark, transcripts, model.automaton, terms),
+        partition_by=["kind"],
     )
     # one pair of id dims for the candidate attach and resolve's name
     # join-back
@@ -409,55 +422,29 @@ def link_and_resolve(
     # the attach is one broadcast join: without TF-IDF it is computed
     # inside the resolved stage rather than checkpointed
     candidates = L.attach_candidates_coded(
-        mentions, surface_forms, surface_dim, topic_dim
+        mentions.filter("kind = 'mention'").drop("kind"),
+        surface_forms, surface_dim, topic_dim,
     )
-    turn_terms = wdf = None
+    wdf = None
     if tfidf:
-        turn_terms, wdf = _turn_terms(stage, transcripts, model)
+        turn_terms = stage(
+            "turn_terms",
+            lambda: mentions.filter("kind = 'term'").select(
+                "conv_id", "turn_idx", F.col("surface").alias("term")
+            ),
+        )
+        wdf = stage(
+            "word_doc_freq",
+            lambda: turn_terms.groupBy(F.col("term").alias("word")).agg(
+                F.count("*").alias("doc_freq")
+            ),
+        )
         attached = candidates
         candidates = stage("candidates", lambda: attached)
     return stage(
         "resolved",
         lambda: CO.resolve(
             candidates, transcripts, mentions, model, surface_dim, topic_dim,
-            turn_terms=turn_terms, word_doc_freq=wdf,
+            word_doc_freq=wdf,
         ),
     )
-
-
-def _turn_terms(
-    stage, transcripts: DataFrame, model: KGModel
-) -> tuple[DataFrame, DataFrame]:
-    """The corpus side of TF-IDF linking: the turn_terms stage, the
-    distinct terms of each turn, tokenized ONCE, and their per-term turn
-    counts (word_doc_freq)."""
-    from careers_spark.functions.text import tokenize_udf
-
-    if model.topic_terms is None:
-        raise ValueError("TF-IDF linking needs a model built with topic term vectors")
-    # cosine dot products only ever touch terms that occur in topic
-    # context NAMES — the model's dictionary-sized term universe. The
-    # scan-side explode is semi-joined to it immediately, so the
-    # materialized turn_terms table is ~vocab-hit tokens, not the full
-    # corpus token stream (30x+ at bench scale). Per-term doc
-    # frequencies (hence idf) are unchanged by dropping other terms, so
-    # scoring is exact.
-    vocab = transcripts.sparkSession.createDataFrame(
-        pd.DataFrame({"term": model.topic_terms.terms}, dtype=object),
-        schema="term string",
-    )
-    turn_terms = stage(
-        "turn_terms",
-        lambda: transcripts.select(
-            "conv_id",
-            "turn_idx",
-            F.explode(F.array_distinct(tokenize_udf(F.col("text")))).alias("term"),
-        ).join(F.broadcast(vocab), "term", "left_semi"),
-    )
-    wdf = stage(
-        "word_doc_freq",
-        lambda: turn_terms.groupBy(F.col("term").alias("word")).agg(
-            F.count("*").alias("doc_freq")
-        ),
-    )
-    return turn_terms, wdf

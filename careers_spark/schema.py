@@ -62,22 +62,16 @@ LINK_WEIGHTS = T.StructType(
     ]
 )
 
+# the mention scan's rows: kind is mention, pred or term
+# (operators.mentions.turn_rows)
 MENTIONS = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
         T.StructField("turn_idx", T.IntegerType(), False),
+        T.StructField("kind", T.StringType(), False),
         T.StructField("start", T.IntegerType(), False),  # token index, inclusive
         T.StructField("end", T.IntegerType(), False),  # token index, inclusive
         T.StructField("surface", T.StringType(), False),
-    ]
-)
-
-# mention candidates after the broadcast dictionary join
-CANDIDATES = T.StructType(
-    MENTIONS.fields
-    + [
-        T.StructField("topic", T.StringType(), False),
-        T.StructField("prior", T.DoubleType(), False),
     ]
 )
 

@@ -14,8 +14,7 @@ applications/WebCVProcess.scala:213-298). The Spark-native equivalent:
     candidates -> coherence resolve) over its fresh conversations —
     coherence needs the whole conversation, and a conversation arrives
     whole within one poll. It links without TF-IDF; why is stated once,
-    in link_and_resolve's docstring. stream_mentions_to_parquet is the
-    mention-scan-only variant.
+    in link_and_resolve's docstring.
 
 Also provides a streaming per-window mention-rate aggregate as the
 monitoring query (tumbling window + watermark).
@@ -311,31 +310,3 @@ def stream_kg_incremental(
         return writer.trigger(availableNow=True).start()
     return writer.trigger(processingTime="30 seconds").start()
 
-
-def stream_mentions_to_parquet(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    checkpoint: str,
-    automaton,
-    once: bool = True,
-):
-    """foreachBatch incremental mention detection: reuse the batch
-    operator per micro-batch, append to a partitioned sink."""
-    from careers_spark.operators.mentions import detect_mentions
-
-    stream = dedup_late_turns(read_transcript_stream(spark, in_path))
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        out = detect_mentions(spark, batch_df, automaton)
-        out.write.mode("append").parquet(out_path)
-
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-    )
-    if once:
-        q = writer.trigger(availableNow=True).start()
-    else:
-        q = writer.trigger(processingTime="30 seconds").start()
-    return q

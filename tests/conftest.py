@@ -1,10 +1,17 @@
+import os
 import shutil
 import sys
 import tempfile
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, in the driver and in the Python workers the
+# JVM forks (they inherit PYTHONPATH), whatever the working directory
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from careers_spark.session import get_spark  # noqa: E402
 

@@ -165,8 +165,13 @@ def test_dense_path_through_spark_stage(spark, monkeypatch):
         {"Main:TA": {"cx": 1.0}, "Main:TB": {"cx": 0.4, "cy": 0.6}}
     )
     model = KGModel(None, surfaces, topics, interned)
+    # the scan rows the candidates came from: mentions only, since the
+    # filler text holds no pattern
+    mentions = cands.selectExpr(
+        "conv_id", "turn_idx", "'mention' as kind", "start", "end", "'' as surface"
+    )
     out = CO.resolve(
-        cands, transcripts, cands, model,
+        cands, transcripts, mentions, model,
         *CO.build_id_dims(spark, surfaces, topics),
     )
     dense = sorted(

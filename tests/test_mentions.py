@@ -56,21 +56,43 @@ def test_shared_suffix_via_fail_links():
 
 
 def test_detect_mentions_df(spark):
+    """One pass per turn: beside the mentions, every predicate-pattern
+    occurrence (spanning the gap tokens, surface the predicate) and,
+    given a term universe, each distinct term at its first position."""
     transcripts = spark.createDataFrame(
         pd.DataFrame(
             {
-                "conv_id": ["c1", "c1"],
-                "turn_idx": pd.array([0, 1], dtype="int32"),
-                "role": ["user", "assistant"],
-                "text": ["tell me about Covent Garden", "no mentions here at all"],
-                "tool": ["", ""],
-                "ts": pd.to_datetime([0, 60], unit="s"),
+                "conv_id": ["c1", "c1", "c1"],
+                "turn_idx": pd.array([0, 1, 2], dtype="int32"),
+                "role": ["user", "assistant", "user"],
+                "text": [
+                    "Ada works at Covent Garden and Covent Garden works at nothing",
+                    "Ada is based in Paris",
+                    "no mentions here at all",
+                ],
+                "tool": ["", "", ""],
+                "ts": pd.to_datetime([0, 60, 120], unit="s"),
             }
         ),
         schema=S.TRANSCRIPTS,
     )
-    ac = _ac("covent garden")
-    rows = detect_mentions(spark, transcripts, ac).collect()
-    assert [(r.conv_id, r.turn_idx, r.start, r.end, r.surface) for r in rows] == [
-        ("c1", 0, 3, 4, "covent garden")
-    ]
+    ac = _ac("ada", "covent garden", "paris")
+    rows = sorted(
+        tuple(r)
+        for r in detect_mentions(spark, transcripts, ac, ["covent", "paris", "zzz"]).collect()
+    )
+    assert rows == sorted([
+        ("c1", 0, "mention", 0, 0, "ada"),
+        ("c1", 0, "mention", 3, 4, "covent garden"),
+        ("c1", 0, "mention", 6, 7, "covent garden"),
+        ("c1", 0, "pred", 1, 2, "works_at"),
+        ("c1", 0, "pred", 8, 9, "works_at"),
+        ("c1", 0, "term", 3, 3, "covent"),
+        ("c1", 1, "mention", 0, 0, "ada"),
+        ("c1", 1, "mention", 4, 4, "paris"),
+        ("c1", 1, "pred", 1, 3, "located_in"),
+        ("c1", 1, "term", 4, 4, "paris"),
+    ])
+    # without a term universe the scan emits no term rows
+    kinds = {r.kind for r in detect_mentions(spark, transcripts, ac).collect()}
+    assert kinds == {"mention", "pred"}

@@ -3,6 +3,7 @@ corpus assert), resume, and the per-turn determinism invariant from
 BASELINE.json's input_hint."""
 
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -265,3 +266,85 @@ def test_empty_stage_output_records_zero_rows(spark, tmp_path):
     assert out.count() == 0
     assert run.stages[-1].rows == 0
     assert not run.stages[-1].resumed
+
+
+# Spark jobs per corpus stage of run_corpus (TF-IDF on) over the smoke
+# corpus (tools/smoke.py: 20 conversations, 8 domains), as counted when
+# the mention scan became each turn's one token pass. Upper bounds: a
+# change that adds a job to a stage raises its bound and says why.
+JOB_BUDGET = {
+    "transcripts": 1,
+    "mentions": 1,
+    "turn_terms": 1,
+    "word_doc_freq": 2,
+    "candidates": 4,
+    "resolved": 7,
+    "triples": 2,
+    "nodes": 4,
+    "edges": 2,
+}
+
+
+def _explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def _cogroup_inputs(df) -> list[list[str]]:
+    """Column names of each input of the plan's pandas cogroup."""
+    seq = lambda s: [s.apply(i) for i in range(s.size())]  # noqa: E731
+    stack = [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        children = seq(node.children())
+        if node.nodeName() == "FlatMapCoGroupsInPandas":
+            return [[a.name() for a in seq(c.output())] for c in children]
+        stack.extend(children)
+    raise AssertionError("no pandas cogroup in the plan")
+
+
+def test_run_corpus_job_budget(spark, tmp_path, monkeypatch):
+    """Each corpus stage runs within its job budget, turn_terms is a
+    read of the scan's term rows with no Python in its plan, and no
+    turn text reaches the resolve cogroup."""
+    kb = synth.build_kb(8)
+    transcripts = spark.createDataFrame(
+        synth.gen_transcripts_pdf(kb, 20), schema=S.TRANSCRIPTS
+    )
+    pipe = KGPipeline(spark, str(tmp_path))
+    d = pipe.run_dictionary(synth.kb_tables(spark, kb))
+
+    sc = spark.sparkContext
+    frames = {}
+    stage = KGPipeline.stage
+
+    def tagged_stage(pipe, run, name, compute, partition_by=None):
+        def keep():
+            frames[name] = compute()
+            return frames[name]
+
+        group = f"job-budget-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            return stage(pipe, run, name, keep, partition_by)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(KGPipeline, "stage", tagged_stage)
+    run = pipe.run_corpus(transcripts, d.outputs)
+    tracker = sc.statusTracker()
+    jobs = {s: len(tracker.getJobIdsForGroup(f"job-budget-{s}")) for s in JOB_BUDGET}
+    assert [s.name for s in run.stages if s.name in JOB_BUDGET] == list(JOB_BUDGET)
+    assert all(jobs[s] <= JOB_BUDGET[s] for s in JOB_BUDGET), jobs
+
+    terms_plan = _explain(frames["turn_terms"])
+    assert "ArrowEvalPython" not in terms_plan
+    assert "BatchEvalPython" not in terms_plan
+    assert "MapInPandas" not in terms_plan
+    assert re.search(r"PartitionFilters: \[.*\(kind#\d+ = term\)", terms_plan)
+
+    inputs = _cogroup_inputs(frames["resolved"])
+    assert len(inputs) == 2
+    assert all("text" not in cols for cols in inputs), inputs

@@ -6,8 +6,14 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from careers_spark.functions.text import normalize_sf_py, tokenize_py
-from careers_spark.operators.coherence import _alternatives, _build_sites
-from careers_spark.operators.mentions import TokenAhoCorasick
+from careers_spark.operators.coherence import (
+    InternedContexts,
+    _alternatives,
+    _build_sites,
+)
+from careers_spark.operators.mentions import TokenAhoCorasick, turn_rows
+from careers_spark.operators.model import TopicTerms
+from careers_spark.synth import PRED_PATTERNS
 
 # (turn, start, end)-sorted, the order _build_sites takes (the
 # resolver's mention spans come from rows sorted on that key)
@@ -88,6 +94,74 @@ def test_tokenize_total_and_idempotent_normal_form(s):
     norm = normalize_sf_py(s)
     # normal form is a fixpoint: normalizing again changes nothing
     assert normalize_sf_py(norm) == norm
+
+
+# --- the mention scan's pattern hits and turn terms ----------------------
+
+_NO_DICTIONARY = TokenAhoCorasick().build()
+pattern_tokens = st.lists(
+    st.sampled_from(
+        sorted({w for key in PRED_PATTERNS for w in key.split(" ")})
+        + ["acme", "paris", "x"]
+    ),
+    max_size=25,
+)
+
+
+def test_pattern_keys_are_token_normal():
+    """A gap's tokens, joined by spaces, can only equal a key in its
+    tokenized form, so every key must be one."""
+    for key in PRED_PATTERNS:
+        assert " ".join(tokenize_py(key)) == key
+
+
+@given(pattern_tokens)
+@settings(max_examples=300, deadline=None)
+def test_pattern_hits_equal_gap_rule(toks):
+    """For every span pair a.end < b.start, the resolver's lookup of
+    (a.end + 1, b.start - 1) in the scan's pattern hits equals the gap
+    rule over the tokens between the spans."""
+    hits = {
+        (s, e): pred
+        for kind, s, e, pred in turn_rows(toks, _NO_DICTIONARY, frozenset())
+        if kind == "pred"
+    }
+    for a_end in range(len(toks)):
+        for b_start in range(a_end + 1, len(toks)):
+            assert hits.get((a_end + 1, b_start - 1)) == PRED_PATTERNS.get(
+                " ".join(toks[a_end + 1 : b_start])
+            )
+
+
+_TOPIC_TERMS = TopicTerms.of(
+    InternedContexts(
+        {
+            "Main:Rice": {"Category:Cities of France": 0.5, "Main:Paris": 0.4},
+            "Main:Bush": {"Main:George W. Bush": 0.9, "Category:President": 0.3},
+        }
+    )
+)
+
+
+@given(
+    st.lists(
+        st.sampled_from(_TOPIC_TERMS.terms + ["Paris,", "BUSH", "w.", "x", "rice"]),
+        max_size=20,
+    )
+)
+@settings(max_examples=200, deadline=None)
+def test_term_rows_are_distinct_universe_tokens(words):
+    """A turn's term rows are its distinct tokens in the model's term
+    universe, in first-occurrence order, each at its first position."""
+    toks = tokenize_py(" ".join(words))
+    terms = frozenset(_TOPIC_TERMS.terms)
+    got = [
+        (s, e, t) for kind, s, e, t in turn_rows(toks, _NO_DICTIONARY, terms)
+        if kind == "term"
+    ]
+    want = [t for t in dict.fromkeys(toks) if t in terms]
+    assert [t for _, _, t in got] == want
+    assert all(s == e == toks.index(t) for s, e, t in got)
 
 
 # --- resolver guard windows (r4) -------------------------------------------

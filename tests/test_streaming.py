@@ -5,7 +5,6 @@ import pandas as pd
 import pytest
 
 from careers_spark import schema as S
-from careers_spark.operators.mentions import TokenAhoCorasick
 from careers_spark.streaming import ingest
 
 
@@ -50,24 +49,6 @@ def test_streaming_dedup(spark, stream_input, tmp_path):
     q.awaitTermination(120)
     rows = spark.sql("select * from dedup_out").collect()
     assert len(rows) == 3  # the duplicate (c1, 1) collapsed
-
-
-def test_streaming_mention_sink(spark, stream_input, tmp_path):
-    ac = TokenAhoCorasick()
-    ac.add("covent garden")
-    ac.build()
-    q = ingest.stream_mentions_to_parquet(
-        spark,
-        stream_input,
-        str(tmp_path / "mentions"),
-        str(tmp_path / "ckpt2"),
-        ac,
-        once=True,
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "mentions"))
-    got = {(r.conv_id, r.turn_idx) for r in out.collect()}
-    assert got == {("c1", 0), ("c1", 1)}
 
 
 def test_turn_rate_window(spark, stream_input, tmp_path):

@@ -228,6 +228,21 @@ def test_run_corpus_scores_match_oracle(spark, overlap_run):
         assert sa == pytest.approx(sb, rel=1e-12, abs=0)
 
 
+def test_turn_terms_are_scan_terms(overlap_run):
+    """The turn_terms stage holds, per turn, its distinct tokenize_py
+    tokens in the model's term universe, read from the mention scan."""
+    run, _, model = overlap_run
+    vocab = set(model.topic_terms.terms)
+    want = sorted(
+        (r.conv_id, r.turn_idx, t)
+        for r in run.outputs["transcripts"].collect()
+        for t in dict.fromkeys(tokenize_py(r.text))
+        if t in vocab
+    )
+    got = sorted(tuple(r) for r in run.outputs["turn_terms"].collect())
+    assert want and got == want
+
+
 def test_zero_idf_overlap_links_on_prior(spark, tmp_path):
     """A one-turn corpus: every term occurs in every turn, so every idf
     and the turn norm are 0. The cosine is 0 there and the score is the

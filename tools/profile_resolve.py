@@ -1,10 +1,15 @@
 """Dev profiling: measure python-side compute seconds inside the resolve
 UDF at two parallelism levels (writes /tmp/rtimes_{n}.txt per run)."""
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import pandas as pd  # noqa: E402
 
@@ -22,13 +27,12 @@ for cpus in (8, 32):
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     cand = spark.read.parquet("/tmp/kg_scale_run_8/candidates")
-    turns = spark.read.parquet("/tmp/kg_scale_run_8/transcripts").select(
-        "conv_id", "turn_idx", "text"
-    )
+    turns = spark.read.parquet("/tmp/kg_scale_run_8/transcripts")
+    # the run's mention scan: its pattern hits and turn terms ride the
+    # cogroup beside the candidates
     mentions = spark.read.parquet("/tmp/kg_scale_run_8/mentions")
     # the candidates table holds anchor priors: resolve scores them by
-    # TF-IDF context cosine from the run's turn terms and doc freqs
-    turn_terms = spark.read.parquet("/tmp/kg_scale_run_8/turn_terms")
+    # TF-IDF context cosine from the scan's turn terms and doc freqs
     wdf = spark.read.parquet("/tmp/kg_scale_run_8/word_doc_freq")
     ctx = spark.read.parquet("/tmp/kg_scale_dict/dict_context_vectors")
     # the candidates table is dictionary-coded: resolve needs the
@@ -48,7 +52,6 @@ for cpus in (8, 32):
     import careers_spark.operators.coherence as comod
 
     def timed(*args, _o=orig_resolve, **kw):
-        import os
         t0 = time.perf_counter()
         r = _o(*args, **kw)
         with open(tfile, "a") as f:
@@ -58,8 +61,7 @@ for cpus in (8, 32):
     comod._resolve_conv = timed
     t0 = time.monotonic()
     n = CO.resolve(
-        cand, turns, mentions, model, surface_dim, topic_dim,
-        turn_terms=turn_terms, word_doc_freq=wdf,
+        cand, turns, mentions, model, surface_dim, topic_dim, word_doc_freq=wdf,
     ).count()
     wall = time.monotonic() - t0
     comod._resolve_conv = orig_resolve
