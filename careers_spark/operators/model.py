@@ -25,14 +25,19 @@ from careers_spark.operators.coherence import InternedContexts, index_ranges
 from careers_spark.operators.mentions import TokenAhoCorasick
 
 
+# heap guard on the driver-collected (surface, topic) pairs
+_MAX_NAME_PAIRS = 50_000_000
+
+
 def name_universes(surface_forms: DataFrame) -> tuple[list[str], list[str]]:
     """Sorted distinct surfaces and topics of the dictionary — one
-    guarded (surface, topic) collect."""
+    bounded (surface, topic) collect."""
     sf_dim = surface_forms.select("surface", "topic").distinct()
-    n_sf = sf_dim.count()  # fail fast BEFORE the collect (heap guard)
-    if n_sf > 50_000_000:
-        raise MemoryError(f"dictionary too large to broadcast: {n_sf} pairs")
-    pairs = sf_dim.collect()
+    pairs = sf_dim.limit(_MAX_NAME_PAIRS + 1).collect()
+    if len(pairs) > _MAX_NAME_PAIRS:
+        raise MemoryError(
+            f"dictionary too large to broadcast: over {_MAX_NAME_PAIRS} pairs"
+        )
     return sorted({r.surface for r in pairs}), sorted({r.topic for r in pairs})
 
 

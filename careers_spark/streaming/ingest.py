@@ -2,21 +2,24 @@
 
 The reference has no streaming — its closest analogue is the polling
 batch worker with max-id cursors (reference:
-applications/WebCVProcess.scala:213-298). The Spark-native equivalent:
-`readStream` over the transcripts location, event-time watermark on
-`ts`, exactly-once de-dup on the (conv_id, turn_idx) key, and either
+applications/WebCVProcess.scala:213-298), which dedups by its cursor
+alone. The Spark-native equivalent is `stream_kg_incremental`: a
+stateless `readStream` over the transcripts location feeding a
+`foreachBatch` incremental KG construction. Each poll runs the batch
+pipeline's own link-and-resolve composition
+(careers_spark.plans.pipeline.link_and_resolve: mentions -> coded
+candidates -> coherence resolve) over its fresh conversations —
+coherence needs the whole conversation, and a conversation arrives
+whole within one poll. It links without TF-IDF; why is stated once, in
+link_and_resolve's docstring.
 
-  - append to the batch transcripts table (the pipeline then runs in
-    its normal checkpointed batch mode per micro-batch window), or
-  - `foreachBatch` incremental KG construction (stream_kg_incremental):
-    each poll runs the batch pipeline's own link-and-resolve composition
-    (careers_spark.plans.pipeline.link_and_resolve: mentions -> coded
-    candidates -> coherence resolve) over its fresh conversations —
-    coherence needs the whole conversation, and a conversation arrives
-    whole within one poll. It links without TF-IDF; why is stated once,
-    in link_and_resolve's docstring.
+The stream's only dedup lives in the sink: (conv_id, turn_idx) keys
+within the micro-batch, then the processed registry (the reference's
+cursor) across epochs. There is no watermark, so no turn is dropped for
+lateness, and no state store, so a poll is one micro-batch.
 
-Also provides a streaming per-window mention-rate aggregate as the
+Also provides the generic streaming operators `dedup_late_turns`
+(watermark + key de-dup) and a per-window turn-rate aggregate as the
 monitoring query (tumbling window + watermark).
 """
 
@@ -127,26 +130,26 @@ def make_incremental_sink(
 
     # Every frame read twice below (an emptiness test, then a write or a
     # second consumer) is materialized once first, so its plan runs once:
-    # the micro-batch's stateful dedup, the digests and the matcher.
+    # the gated micro-batch, the digests and the matcher.
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if batch_df.isEmpty():
-            return
         ep = int(epoch_id)
-        # replay safety: a replayed epoch's own (possibly partial)
-        # registry rows must not gate away its recomputation
+        # the stream's only dedup: turn keys within the batch, then the
+        # registry of conversations processed by earlier epochs (a
+        # replayed epoch's own, possibly partial, registry rows must not
+        # gate away its recomputation)
+        fresh = batch_df.dropDuplicates(["conv_id", "turn_idx"])
         seen = _read_store(spark, processed_dir)
-        fresh = batch_df
         if seen is not None:
-            fresh = batch_df.join(
+            fresh = fresh.join(
                 seen.filter(F.col("epoch") != ep)
                 .select("conv_id")
                 .dropDuplicates(),
                 "conv_id",
                 "left_anti",
-            ).localCheckpoint(eager=True)
-            if fresh.isEmpty():
-                return
+            )
+        fresh = fresh.localCheckpoint(eager=True)
+        if fresh.isEmpty():
+            return
 
         # -- processCVs ---------------------------------------------------
         out = link_and_resolve(checkpoint_stage, fresh, surface_forms, model)
@@ -281,6 +284,13 @@ def stream_kg_incremental(
     (the reference's unit of arrival is a complete CV); turns of a
     conv_id seen in an earlier batch are dropped by the gate.
 
+    The query is stateless: the per-batch (conv_id, turn_idx) dedup plus
+    the conversation-level gate give exactly-once per conversation, with
+    no watermark and no state store. So a conversation delivered after
+    newer ones is still resolved (no lateness drop), a poll runs exactly
+    one micro-batch (epochs are numbered one per poll), and the sink
+    runs with the session's adaptive execution on.
+
     Delivery semantics (r5: EXACTLY-once per conversation): every store
     is laid out as per-epoch partition directories
     (`<store>/epoch=<id>/`) written with mode("overwrite"), so a
@@ -295,6 +305,13 @@ def stream_kg_incremental(
     the sink replays to a byte-identical store, gated by
     tests/test_incremental_loop.py::test_replay_is_idempotent.
 
+    Checkpoint migration: a checkpoint written by the earlier stateful
+    query (watermark + dropDuplicates) cannot be resumed — Spark refuses
+    it with STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA.
+    Start a new `checkpoint` AND a new `out_dir`: batch ids restart at
+    0, and the stores are overwritten per epoch, so an old `out_dir`
+    would have its epochs overwritten by unrelated polls.
+
     Gated end-to-end by tests/test_incremental_loop.py: two-batch ingest
     == cold batch run, second batch touches only fresh conv_ids.
     """
@@ -302,7 +319,7 @@ def stream_kg_incremental(
         spark, out_dir, automaton, surface_forms, context_vectors,
         min_similarity=min_similarity,
     )
-    stream = dedup_late_turns(read_transcript_stream(spark, in_path))
+    stream = read_transcript_stream(spark, in_path)
     writer = stream.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint
     )

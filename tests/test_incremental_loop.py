@@ -10,7 +10,10 @@ Structured-Streaming micro-batches over stream_kg_incremental:
     all-pairs digest similarity at the same threshold (new x all +
     old x new over two polls covers every unordered pair exactly once);
   - the two polls' triples equal a batch KGPipeline run over the same
-    conversations.
+    conversations;
+  - the query is stateless: one micro-batch per poll, no conversation
+    lost for arriving after newer ones, duplicate turns within a batch
+    resolved once, and each sink call within its job budget.
 """
 
 import pytest
@@ -43,36 +46,45 @@ def corpus(spark):
     return sf, ctx, transcripts, KGModel.build(sf, ctx), kb
 
 
+def _poll(spark, corpus, tmp_path, frame) -> str:
+    """Deliver `frame` to the stream's input directory and run
+    stream_kg_incremental until it has processed everything delivered.
+    Returns the out_dir."""
+    sf, ctx, _, model, _ = corpus
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    frame.write.mode("append").parquet(in_dir)
+    q = ingest.stream_kg_incremental(
+        spark,
+        in_dir,
+        out_dir,
+        str(tmp_path / "ckpt"),
+        model.automaton,
+        sf,
+        ctx,
+        once=True,
+        min_similarity=MIN_SIM,
+    )
+    q.awaitTermination(300)
+    return out_dir
+
+
+def _halves(transcripts):
+    """Sorted conv_ids and the set of the first half of them."""
+    convs = sorted(r.conv_id for r in transcripts.select("conv_id").distinct().collect())
+    return convs, set(convs[: len(convs) // 2])
+
+
 def _two_polls(spark, corpus, tmp_path):
     """Poll 1 delivers the first half of the conversations; poll 2
     re-delivers the full corpus (the second half is fresh, the first
     half must be gated away). Returns (out_dir, first-half conv_ids)."""
     from pyspark.sql import functions as F
 
-    sf, ctx, transcripts, model, _ = corpus
-    convs = sorted(r.conv_id for r in transcripts.select("conv_id").distinct().collect())
-    half = set(convs[: len(convs) // 2])
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-
-    def poll(frame):
-        frame.write.mode("append").parquet(in_dir)
-        q = ingest.stream_kg_incremental(
-            spark,
-            in_dir,
-            out_dir,
-            str(tmp_path / "ckpt"),
-            model.automaton,
-            sf,
-            ctx,
-            once=True,
-            min_similarity=MIN_SIM,
-        )
-        q.awaitTermination(300)
-
-    poll(transcripts.filter(F.col("conv_id").isin(list(half))))
-    poll(transcripts)
-    return out_dir, half
+    transcripts = corpus[2]
+    _, half = _halves(transcripts)
+    _poll(spark, corpus, tmp_path, transcripts.filter(F.col("conv_id").isin(list(half))))
+    return _poll(spark, corpus, tmp_path, transcripts), half
 
 
 def test_two_batch_incremental_equals_cold_run(spark, corpus, tmp_path):
@@ -226,3 +238,89 @@ def test_zero_hit_batch_does_not_poison_stores(spark, corpus, tmp_path):
     sink(transcripts, 1)
     assert spark.read.parquet(f"{out_dir}/resolved").count() > 0
     assert spark.read.parquet(f"{out_dir}/digests").count() > 0
+
+
+def test_one_micro_batch_per_poll(spark, corpus, tmp_path):
+    """The query is stateless: no watermark no-data batch follows a
+    poll's data batch, so two polls write epochs 0 and 1."""
+    out_dir, _ = _two_polls(spark, corpus, tmp_path)
+    epochs = spark.read.parquet(f"{out_dir}/processed").select("epoch").distinct()
+    assert sorted(r.epoch for r in epochs.collect()) == [0, 1]
+
+
+def test_late_conversations_are_resolved(spark, corpus, tmp_path):
+    """Conversations delivered after newer ones are not lost: synth
+    spaces conversations an hour apart, so every turn of the first half
+    is older than the newest turn of the second half. Polling the second
+    half first, then the first half, registers every conversation
+    exactly once and resolves the same triples as one pass over the
+    whole corpus."""
+    from pyspark.sql import functions as F
+
+    sf, _, transcripts, model, _ = corpus
+    convs, half = _halves(transcripts)
+    first = F.col("conv_id").isin(list(half))
+    _poll(spark, corpus, tmp_path, transcripts.filter(~first))
+    out_dir = _poll(spark, corpus, tmp_path, transcripts.filter(first))
+
+    processed = [r.conv_id for r in spark.read.parquet(f"{out_dir}/processed").collect()]
+    assert sorted(processed) == convs
+    cold = link_and_resolve(checkpoint_stage, transcripts, sf, model)
+    inc = spark.read.parquet(f"{out_dir}/resolved").select(cold.columns)
+    assert inc.exceptAll(cold).isEmpty()
+    assert cold.exceptAll(inc).isEmpty()
+
+
+def test_within_batch_duplicate_turns_resolve_once(spark, corpus, tmp_path):
+    """The sink dedups turn keys within its batch: a batch holding every
+    row twice writes the same four stores as the rows once."""
+    sf, ctx, transcripts, model, _ = corpus
+
+    def stores(name, batch):
+        out_dir = str(tmp_path / name)
+        sink = ingest.make_incremental_sink(
+            spark, out_dir, model.automaton, sf, ctx, min_similarity=MIN_SIM
+        )
+        sink(batch, 0)
+        return {
+            store: sorted(spark.read.parquet(f"{out_dir}/{store}").collect(), key=repr)
+            for store in ("resolved", "digests", "matches", "processed")
+        }
+
+    once = stores("once", transcripts)
+    assert once["resolved"] and once["matches"]  # non-trivial corpus
+    assert stores("twice", transcripts.unionByName(transcripts)) == once
+
+
+# Spark jobs per sink call over the module corpus: the first poll (half
+# the conversations, empty stores) and the second (the full corpus
+# re-delivered, half of it gated away), as counted when the stream
+# became stateless. The second poll ran 52 or 53 jobs over 27 runs:
+# adaptive execution schedules the matcher's query stages as jobs, one
+# more or less from run to run. Upper bounds that record a count, not
+# a target: a change may add jobs and still cut the wall. A change that
+# adds a job raises the bound and says why.
+POLL_JOB_BUDGET = (42, 53)
+
+
+def test_poll_job_budget(spark, corpus, tmp_path):
+    """Each of two sink calls runs within its job budget."""
+    from pyspark.sql import functions as F
+
+    sf, ctx, transcripts, model, _ = corpus
+    _, half = _halves(transcripts)
+    sink = ingest.make_incremental_sink(
+        spark, str(tmp_path / "out"), model.automaton, sf, ctx, min_similarity=MIN_SIM
+    )
+    sc = spark.sparkContext
+    polls = (transcripts.filter(F.col("conv_id").isin(list(half))), transcripts)
+    for ep, batch in enumerate(polls):
+        sc.setJobGroup(f"poll-budget-{ep}", f"poll {ep}")
+        try:
+            sink(batch, ep)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tuple(len(tracker.getJobIdsForGroup(f"poll-budget-{ep}")) for ep in range(2))
+    assert all(n <= bound for n, bound in zip(jobs, POLL_JOB_BUDGET)), jobs

@@ -253,6 +253,28 @@ def test_model_build_heap_guard(spark):
         KGModel.MAX_CONTEXT_TOPICS = old
 
 
+def test_name_universes_bounded_collect(spark, monkeypatch):
+    """The (surface, topic) pairs come back in one bounded collect: a
+    dictionary of exactly the bound's distinct pairs passes, one more
+    pair than the bound raises."""
+    from careers_spark.operators import model as MD
+
+    sf = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "surface": ["a", "a", "b", "a"],
+                "topic": ["Main:A", "Main:B", "Main:A", "Main:A"],
+                "prior": [0.5, 0.5, 1.0, 0.5],
+            }
+        )
+    )
+    monkeypatch.setattr(MD, "_MAX_NAME_PAIRS", 3)
+    assert MD.name_universes(sf) == (["a", "b"], ["Main:A", "Main:B"])
+    monkeypatch.setattr(MD, "_MAX_NAME_PAIRS", 2)
+    with pytest.raises(MemoryError):
+        MD.name_universes(sf)
+
+
 def test_empty_stage_output_records_zero_rows(spark, tmp_path):
     """A legitimately empty stage output (only _SUCCESS, no part files)
     records rows=0 in lineage instead of crashing the pipeline — the

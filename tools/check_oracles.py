@@ -3,9 +3,16 @@ entry on Spark and its oracle_sql() twin on DuckDB, compare row count,
 column names, and an order-insensitive value hash."""
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, in this process and in the Python workers the
+# JVM forks (they inherit PYTHONPATH), whatever the working directory
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb  # noqa: E402
 

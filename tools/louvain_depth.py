@@ -11,9 +11,16 @@ carry), with a Q/count probe after each level.
 Usage: python tools/louvain_depth.py [levels] [sf_dir]
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, in this process and in the Python workers the
+# JVM forks (they inherit PYTHONPATH), whatever the working directory
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from pyspark.sql import functions as F  # noqa: E402
 

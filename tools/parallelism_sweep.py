@@ -5,12 +5,20 @@ order-insensitive value hashes — byte-identical results required.
 Usage: python tools/parallelism_sweep.py q1 q2 ...   (default: all)
 """
 
+import os
 import subprocess
 import sys
 
+# this checkout's package, in this process and in the Python workers the
+# JVM forks (they inherit PYTHONPATH), whatever the working directory
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
+
 CHILD = r"""
 import hashlib, json, sys
-sys.path.insert(0, "/root/repo")
 import __spark_entry__ as E
 from careers_spark.session import get_spark
 
@@ -64,5 +72,4 @@ def main():
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo")
     main()

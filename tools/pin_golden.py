@@ -9,12 +9,18 @@ semantics; the pytest P/R gate guards against unintentional drift.
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, in this process and in the Python workers the
+# JVM forks (they inherit PYTHONPATH), whatever the working directory
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from careers_spark.plans.flagship import kg_triples_synth  # noqa: E402
 from careers_spark.session import get_spark  # noqa: E402
 
-OUT = "/root/repo/careers_spark/golden/kg_triples_synth.sql"
+OUT = os.path.join(ROOT, "careers_spark", "golden", "kg_triples_synth.sql")
 
 
 def main():
@@ -44,7 +50,7 @@ if __name__ == "__main__":
     main()
 
 
-TR_OUT = "/root/repo/careers_spark/golden/transcripts_synth.sql"
+TR_OUT = os.path.join(ROOT, "careers_spark", "golden", "transcripts_synth.sql")
 
 
 def pin_transcripts():

@@ -3,9 +3,16 @@ raw tables (+ expected triples) as parquet, so N- and 4N-core runs read
 the IDENTICAL input."""
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, in this process and in the Python workers the
+# JVM forks (they inherit PYTHONPATH), whatever the working directory
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from careers_spark import synth  # noqa: E402
 from careers_spark.session import get_spark  # noqa: E402

@@ -1,10 +1,17 @@
 """Fast end-to-end smoke: tiny synth corpus -> pipeline -> P/R printout."""
 
+import os
 import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, in this process and in the Python workers the
+# JVM forks (they inherit PYTHONPATH), whatever the working directory
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from careers_spark import synth
 from careers_spark.plans.pipeline import KGPipeline
