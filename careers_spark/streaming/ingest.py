@@ -128,124 +128,92 @@ def make_incremental_sink(
     digests_dir = os.path.join(out_dir, "digests")
     matches_dir = os.path.join(out_dir, "matches")
 
+    # The per-epoch store rule. Every read that feeds a batch's
+    # computation excludes the batch's own epoch, so a replay recomputes
+    # from the pre-batch state (same prev_max, same vec_ids). Every
+    # write overwrites `<store>/epoch=<ep>`, so a replay replaces its own
+    # partial output. Callers skip empty frames instead of writing them:
+    # an epoch dir holding only a _SUCCESS marker would later fail
+    # schema inference on the store read and poison every later batch (a
+    # batch of conversations with zero dictionary hits is legitimate).
+    # Recomputation is deterministic, so a skipped write is skipped again.
+    def earlier(path: str, ep: int) -> DataFrame | None:
+        store = _read_store(spark, path)
+        return None if store is None else store.filter(F.col("epoch") != ep)
+
+    def write(df: DataFrame, path: str, ep: int) -> None:
+        df.write.mode("overwrite").parquet(f"{path}/epoch={ep}")
+
     # Every frame read twice below (an emptiness test, then a write or a
     # second consumer) is materialized once first, so its plan runs once:
-    # the gated micro-batch, the digests and the matcher.
+    # the gated micro-batch, the digests, the ranked ids and the matches.
+    # The earlier epochs' stores are read, never materialized.
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         ep = int(epoch_id)
         # the stream's only dedup: turn keys within the batch, then the
-        # registry of conversations processed by earlier epochs (a
-        # replayed epoch's own, possibly partial, registry rows must not
-        # gate away its recomputation)
+        # registry of conversations processed by earlier epochs
         fresh = batch_df.dropDuplicates(["conv_id", "turn_idx"])
-        seen = _read_store(spark, processed_dir)
+        seen = earlier(processed_dir, ep)
         if seen is not None:
-            fresh = fresh.join(
-                seen.filter(F.col("epoch") != ep)
-                .select("conv_id")
-                .dropDuplicates(),
-                "conv_id",
-                "left_anti",
-            )
+            fresh = fresh.join(seen.select("conv_id"), "conv_id", "left_anti")
         fresh = fresh.localCheckpoint(eager=True)
         if fresh.isEmpty():
             return
 
         # -- processCVs ---------------------------------------------------
         out = link_and_resolve(checkpoint_stage, fresh, surface_forms, model)
-        # empty outputs are SKIPPED, not written: an epoch dir holding
-        # only a _SUCCESS marker would later fail schema inference on
-        # the store read and poison every subsequent batch (a batch of
-        # conversations with zero dictionary hits is legitimate).
-        # Replay-consistent: recomputation is deterministic, so a
-        # skipped write is skipped again.
         if not out.isEmpty():
-            out.write.mode("overwrite").parquet(f"{resolved_dir}/epoch={ep}")
+            write(out, resolved_dir, ep)
 
         # -- processMatches -----------------------------------------------
-        # prev_max likewise excludes this epoch: a replay that already
-        # wrote partial digests must re-derive the SAME vec_ids
-        old_dg = _read_store(spark, digests_dir)
-        if old_dg is not None:
-            old_dg = (
-                old_dg.filter(F.col("epoch") != ep)
-                .drop("epoch")
-                .localCheckpoint(eager=True)
-            )
-            if old_dg.isEmpty():
-                old_dg = None
+        old_dg = earlier(digests_dir, ep)
         prev_max = 0
-        if old_dg is not None:
-            prev_max = old_dg.agg(F.max("vec_id")).collect()[0][0] or 0
+        if old_dg is not None:  # None or 0 rows: the ids start at 1
+            prev_max = old_dg.agg(F.max("vec_id")).first()[0] or 0
         dg = document_digests(links_of(out)).localCheckpoint(eager=True)
-        # r6 (VERDICT r5 #6, guide §2.5): vec_ids are the dense ranks
-        # of this epoch's distinct conv_ids — the old unpartitioned
-        # dense_rank window single-partition-sorted a backfill-sized
-        # poll. Two-phase ranking assigns the IDENTICAL ids: range
-        # partitioning makes partitions order-disjoint, so partition
-        # offset + local rank == global rank whatever the sampled
-        # boundaries are; the offset table is one bounded
+        # vec_ids are prev_max + the dense rank of this epoch's distinct
+        # conv_ids, ranked in two phases because an unpartitioned
+        # dense_rank window sorts a backfill-sized poll in one partition.
+        # Range partitioning makes partitions order-disjoint, so a
+        # partition's running offset + local rank == global rank whatever
+        # the sampled boundaries are; the sizes are one bounded
         # (n_partitions)-row collect.
         distinct_ids = (
             dg.select("conv_id")
             .dropDuplicates()
-            .repartitionByRange(
-                spark.sparkContext.defaultParallelism, "conv_id"
-            )
+            .repartitionByRange(spark.sparkContext.defaultParallelism, "conv_id")
             .withColumn("_p", F.spark_partition_id())
             .localCheckpoint(eager=True)
         )
-        sizes = {
-            r["_p"]: r["c"]
-            for r in distinct_ids.groupBy("_p")
-            .agg(F.count("*").alias("c"))
-            .collect()
-        }
-        offsets = {}
-        acc = 0
-        for p in sorted(sizes):
-            offsets[p] = acc
-            acc += sizes[p]
-        off_col = F.coalesce(
-            *(
-                [
-                    F.when(F.col("_p") == p, F.lit(int(off)))
-                    for p, off in sorted(offsets.items())
-                ]
-                or [F.lit(0)]
-            ),
-            F.lit(0),
-        )
-        ids = distinct_ids.withColumn(
-            "vec_id",
-            F.lit(int(prev_max))
-            + off_col
-            + F.row_number().over(
-                Window.partitionBy("_p").orderBy("conv_id")
-            ),
-        ).drop("_p")
-        new_dg = dg.join(ids, "conv_id").localCheckpoint(eager=True)
-        all_dg = (
-            new_dg
-            if old_dg is None
-            else old_dg.unionByName(new_dg).localCheckpoint(eager=True)
-        )
-        matches = incremental_digest_pairs(
-            all_dg.selectExpr("vec_id as id_a", "topic", "weight"),
-            all_dg.selectExpr("vec_id as id_b", "topic", "weight"),
-            prev_max,
-            prev_max,
-            min_similarity=min_similarity,
-        ).filter(F.col("id_a") < F.col("id_b")).localCheckpoint(eager=True)
-        if not matches.isEmpty():
-            matches.write.mode("overwrite").parquet(f"{matches_dir}/epoch={ep}")
-        if not new_dg.isEmpty():
-            new_dg.write.mode("overwrite").parquet(f"{digests_dir}/epoch={ep}")
+        sizes = sorted(distinct_ids.groupBy("_p").count().collect())
+        if sizes:  # no digests: no ids, no matches
+            offsets, acc = [], prev_max
+            for p, n in sizes:
+                offsets += [F.lit(p), F.lit(acc)]
+                acc += n
+            ids = distinct_ids.withColumn(
+                "vec_id",
+                F.create_map(*offsets)[F.col("_p")]
+                + F.row_number().over(Window.partitionBy("_p").orderBy("conv_id")),
+            ).drop("_p")
+            new_dg = dg.join(ids, "conv_id").localCheckpoint(eager=True)
+            # all x new: once id_a < id_b, new x all adds only new x new
+            all_dg = (
+                new_dg if old_dg is None else old_dg.drop("epoch").unionByName(new_dg)
+            )
+            matches = incremental_digest_pairs(
+                all_dg.selectExpr("vec_id as id_a", "topic", "weight"),
+                new_dg.selectExpr("vec_id as id_b", "topic", "weight"),
+                prev_max,
+                prev_max,
+                min_similarity=min_similarity,
+            ).filter(F.col("id_a") < F.col("id_b")).localCheckpoint(eager=True)
+            if not matches.isEmpty():
+                write(matches, matches_dir, ep)
+            write(new_dg, digests_dir, ep)
         # the freshness gate is written LAST: its presence certifies the
         # epoch's data writes all landed (r4 ADVICE ordering)
-        fresh.select("conv_id").dropDuplicates().write.mode(
-            "overwrite"
-        ).parquet(f"{processed_dir}/epoch={ep}")
+        write(fresh.select("conv_id").dropDuplicates(), processed_dir, ep)
 
     return sink
 
@@ -274,11 +242,12 @@ def stream_kg_incremental(
          coherence resolve on the fresh conversations only, appended to
          the resolved store (:226-249's annotate-and-persist);
       3. processMatches: fresh digests get monotone vector ids past the
-         previous max (the reference's DB sequence — id assignment is a
-         batch-bounded serial window, exactly as serial as the sequence
-         it mirrors) and the BLOCKED incremental matcher scores
-         new x all / old x new through the digest-topic equi-join
-         (:286-291), never a crossJoin — the unbounded-poll scale path.
+         previous max (the reference's DB sequence), dense in conv_id
+         order, and the BLOCKED incremental matcher scores all x new
+         through the digest-topic equi-join, never a crossJoin — the
+         reference's new x all / old x new (:286-291), since new x all
+         kept to id_a < id_b is new x new. The earlier epochs' digest
+         store is read as a parquet scan, never materialized.
 
     A conversation is assumed to arrive whole within one micro-batch
     (the reference's unit of arrival is a complete CV); turns of a

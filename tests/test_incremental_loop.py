@@ -7,13 +7,15 @@ Structured-Streaming micro-batches over stream_kg_incremental:
   - the union of both batches' resolved triples must be IDENTICAL to a
     cold batch run over the full corpus;
   - the union of both batches' incremental matches must equal the cold
-    all-pairs digest similarity at the same threshold (new x all +
-    old x new over two polls covers every unordered pair exactly once);
+    all-pairs digest similarity at the same threshold (all x new per
+    poll covers every unordered pair exactly once over two polls);
   - the two polls' triples equal a batch KGPipeline run over the same
     conversations;
   - the query is stateless: one micro-batch per poll, no conversation
     lost for arriving after newer ones, duplicate turns within a batch
-    resolved once, and each sink call within its job budget.
+    resolved once, and each sink call within its job budget;
+  - each epoch's vector ids are dense in conv_id order past the
+    previous max.
 """
 
 import pytest
@@ -87,10 +89,17 @@ def _two_polls(spark, corpus, tmp_path):
     return _poll(spark, corpus, tmp_path, transcripts), half
 
 
-def test_two_batch_incremental_equals_cold_run(spark, corpus, tmp_path):
+@pytest.fixture(scope="module")
+def two_polls(spark, corpus, tmp_path_factory):
+    """One `_two_polls` run shared by the tests that only read its
+    stores."""
+    return _two_polls(spark, corpus, tmp_path_factory.mktemp("two_polls"))
+
+
+def test_two_batch_incremental_equals_cold_run(spark, corpus, two_polls):
     sf, ctx, transcripts, model, _ = corpus
     convs = sorted(r.conv_id for r in transcripts.select("conv_id").distinct().collect())
-    out_dir, half = _two_polls(spark, corpus, tmp_path)
+    out_dir, half = two_polls
 
     # -- the gate: batch 2 processed only fresh conv_ids -------------------
     processed = spark.read.parquet(f"{out_dir}/processed").collect()
@@ -131,13 +140,13 @@ def test_two_batch_incremental_equals_cold_run(spark, corpus, tmp_path):
         assert abs(got[k] - want[k]) < 1e-6
 
 
-def test_two_polls_equal_batch_pipeline(spark, corpus, tmp_path):
+def test_two_polls_equal_batch_pipeline(spark, corpus, tmp_path, two_polls):
     """The streaming sink and KGPipeline.run_corpus share one
     link-and-resolve composition; over the same synth conversations the
     two polls' triples equal the batch run's (TF-IDF on in batch: the
     synth turns hold no context-name words, so it is the identity)."""
     _, _, transcripts, _, kb = corpus
-    out_dir, _ = _two_polls(spark, corpus, tmp_path)
+    out_dir, _ = two_polls
     cols = ["conv_id", "turn_idx", "subj", "pred", "obj"]
     stream = {
         tuple(r)
@@ -240,12 +249,49 @@ def test_zero_hit_batch_does_not_poison_stores(spark, corpus, tmp_path):
     assert spark.read.parquet(f"{out_dir}/digests").count() > 0
 
 
-def test_one_micro_batch_per_poll(spark, corpus, tmp_path):
+def test_one_micro_batch_per_poll(spark, two_polls):
     """The query is stateless: no watermark no-data batch follows a
     poll's data batch, so two polls write epochs 0 and 1."""
-    out_dir, _ = _two_polls(spark, corpus, tmp_path)
+    out_dir, _ = two_polls
     epochs = spark.read.parquet(f"{out_dir}/processed").select("epoch").distinct()
     assert sorted(r.epoch for r in epochs.collect()) == [0, 1]
+
+
+def test_vec_ids_dense_in_conv_id_order(spark, corpus, tmp_path):
+    """Each epoch numbers the conversations it digests prev_max+1 ...
+    prev_max+n in conv_id order, prev_max the largest id of the earlier
+    epochs, and a replay of the last epoch keeps those ids. The fixture
+    session's 8 cores spread the ranking over several range partitions,
+    so a wrong partition offset shows as a gap, an overlap or a
+    reordering. Three polls, each delivering a third more of the
+    corpus, then the last one replayed."""
+    from pyspark.sql import functions as F
+
+    sf, ctx, transcripts, model, _ = corpus
+    convs, _ = _halves(transcripts)
+    sink = ingest.make_incremental_sink(
+        spark, str(tmp_path / "out"), model.automaton, sf, ctx, min_similarity=MIN_SIM
+    )
+    third = len(convs) // 3
+    for ep, n in enumerate((third, 2 * third, len(convs))):
+        sink(transcripts.filter(F.col("conv_id").isin(convs[:n])), ep)
+    sink(transcripts, 2)
+
+    assert spark.sparkContext.defaultParallelism > 1
+    by_epoch: dict[int, list] = {}
+    for r in (
+        spark.read.parquet(str(tmp_path / "out" / "digests"))
+        .select("epoch", "conv_id", "vec_id")
+        .distinct()
+        .collect()
+    ):
+        by_epoch.setdefault(r.epoch, []).append((r.conv_id, r.vec_id))
+    assert sorted(by_epoch) == [0, 1, 2]
+    prev_max = 0
+    for ep in sorted(by_epoch):
+        ids = [vec_id for _, vec_id in sorted(by_epoch[ep])]
+        assert ids == list(range(prev_max + 1, prev_max + len(ids) + 1)), ep
+        prev_max = ids[-1]
 
 
 def test_late_conversations_are_resolved(spark, corpus, tmp_path):
@@ -294,13 +340,12 @@ def test_within_batch_duplicate_turns_resolve_once(spark, corpus, tmp_path):
 
 # Spark jobs per sink call over the module corpus: the first poll (half
 # the conversations, empty stores) and the second (the full corpus
-# re-delivered, half of it gated away), as counted when the stream
-# became stateless. The second poll ran 52 or 53 jobs over 27 runs:
-# adaptive execution schedules the matcher's query stages as jobs, one
-# more or less from run to run. Upper bounds that record a count, not
-# a target: a change may add jobs and still cut the wall. A change that
-# adds a job raises the bound and says why.
-POLL_JOB_BUDGET = (42, 53)
+# re-delivered, half of it gated away), as counted once the sink read
+# the earlier digests without materializing them and matched all x new.
+# Upper bounds that record a count, not a target: a change may add jobs
+# and still cut the wall. A change that adds a job raises the bound and
+# says why.
+POLL_JOB_BUDGET = (41, 49)
 
 
 def test_poll_job_budget(spark, corpus, tmp_path):
